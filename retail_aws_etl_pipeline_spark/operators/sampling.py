@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from retail_aws_etl_pipeline_spark.operators.validate import observed_or_aggregated
+
 #: Number of hash buckets the id space is divided into.
 SPLIT_BUCKETS = 100
 
@@ -614,13 +616,7 @@ def perceptron_fit_trace(
                 .agg(F.sum(F.col("y") * F.col("cnt")).alias("dw"))
                 .collect()
             )
-        try:
-            cen = obs.get
-        except Exception:
-            # empty-at-runtime frame: AQE's empty-relation propagation can
-            # prune the Observation node (the validate-module fallback) —
-            # re-aggregate the (empty) lineage explicitly
-            cen = cen_frame.agg(*cen_aggs).first().asDict()
+        cen = observed_or_aggregated(obs, cen_frame, cen_aggs)
         w = list(w)
         for r in delta:
             w[int(r.b)] += int(r.dw)

@@ -31,6 +31,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Callable
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -75,6 +76,38 @@ def _required_null_cond():
         name = "timestamp_raw" if c == "timestamp" else c
         cond = cond | F.col(name).isNull()
     return cond
+
+
+def _is_pruned_observation(err: Py4JJavaError) -> bool:
+    """True for the error ``Observation.get`` raises when AQE pruned the
+    observed node: a Java ``AssertionError`` thrown in
+    ``PythonSQLUtils.toPyRow`` while converting the schemaless row."""
+    jerr = err.java_exception
+    if jerr.getClass().getName() != "java.lang.AssertionError":
+        return False
+    return any(
+        f.getClassName().endswith("PythonSQLUtils") and f.getMethodName() == "toPyRow"
+        for f in jerr.getStackTrace()
+    )
+
+
+def observed_or_aggregated(obs: Observation, frame: DataFrame, exprs) -> dict:
+    """Observation metrics, or an explicit aggregation fallback.
+
+    When a frame is empty AT RUNTIME (e.g. every row rejected), AQE's
+    empty-relation propagation can prune the Observation node below the
+    empty shuffle — ``obs.get`` then fails converting a schemaless row
+    (the ``toPyRow`` assertion). The explicit aggregation yields the
+    identical dict by re-running the (empty-input) lineage — the
+    degenerate all-reject case only, where the file is one cheap extra
+    scan. Every other error propagates.
+    """
+    try:
+        return obs.get
+    except Py4JJavaError as err:
+        if not _is_pruned_observation(err):
+            raise
+    return frame.agg(*exprs).first().asDict()
 
 
 def align_reject_schema(df: DataFrame) -> DataFrame:
@@ -204,24 +237,8 @@ def split_quality(
     # The Observation nodes above record all class totals during the first
     # action (normally the caller's silver write). ``resolve_counts`` just
     # reads them back and derives the report dict.
-    def _obs_or_agg(obs, frame, exprs) -> dict:
-        """Observation metrics, or an explicit aggregation fallback.
-
-        When a frame is empty AT RUNTIME (e.g. every row rejected), AQE's
-        empty-relation propagation can prune the Observation node below
-        the empty shuffle — ``obs.get`` then surfaces a schemaless row
-        (``toPyRow`` assertion). The explicit fallback aggregation yields
-        the identical dict by re-running the (empty-input) lineage — the
-        degenerate all-reject case only, where the file is one cheap
-        extra scan.
-        """
-        try:
-            return obs.get
-        except Exception:
-            return frame.agg(*exprs).first().asDict()
-
     def _resolve() -> dict:
-        base = _obs_or_agg(
+        base = observed_or_aggregated(
             obs_parse,
             parsed,
             [
@@ -232,7 +249,7 @@ def split_quality(
                 ).alias("invalid_timestamp"),
             ],
         )
-        after = _obs_or_agg(
+        after = observed_or_aggregated(
             obs_dedup,
             deduped,
             [

@@ -19,7 +19,7 @@ from retail_aws_etl_pipeline_spark.operators import clustering as C
 from retail_aws_etl_pipeline_spark.operators import dedup as D
 from retail_aws_etl_pipeline_spark.operators import similarity as S
 from retail_aws_etl_pipeline_spark.operators import textops as TX
-from retail_aws_etl_pipeline_spark.plans.queries import EXTRA_REGISTRY, register, register_extra
+from retail_aws_etl_pipeline_spark.plans.queries import register
 from retail_aws_etl_pipeline_spark.session import load_tables
 
 # ---------------------------------------------------------------------------
@@ -75,28 +75,6 @@ n AS (
 ANN_PROBE_IDS = [0, 1, 2, 3, 4]
 ANN_K = 10
 
-ANN_TOPK_ORACLE = f"""
-WITH {_quant_cte()},
-pairs AS (
-    SELECT p.vec_id AS probe_id, c.vec_id,
-           CAST(list_sum(list_transform(range(1, len(p.qvec) + 1), i -> p.qvec[i] * c.qvec[i])) AS BIGINT) AS dot_q,
-           p.qnorm AS pn, c.qnorm AS cn
-    FROM n p, n c
-    WHERE p.vec_id IN ({", ".join(map(str, ANN_PROBE_IDS))}) AND c.vec_id != p.vec_id
-),
-ranked AS (
-    SELECT probe_id, vec_id, dot_q,
-           dot_q / sqrt(CAST(pn * cn AS DOUBLE)) AS cosine,
-           ROW_NUMBER() OVER (
-               PARTITION BY probe_id
-               ORDER BY dot_q / sqrt(CAST(pn * cn AS DOUBLE)) DESC, vec_id ASC) AS rank
-    FROM pairs
-)
-SELECT probe_id, vec_id, dot_q, cosine, rank
-FROM ranked WHERE rank <= {ANN_K}
-ORDER BY probe_id, rank
-"""
-
 
 def _planes_values(n_planes: int | None = None) -> str:
     planes = S.PLANES if n_planes is None else S.PLANES[:n_planes]
@@ -109,59 +87,6 @@ def _planes_values(n_planes: int | None = None) -> str:
 # ---------------------------------------------------------------------------
 # Dedup queries
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "exact_dup_docs",
-    """
-    SELECT md5(text) AS text_hash, COUNT(*) AS n_docs, MIN(doc_id) AS keep_id
-    FROM documents
-    GROUP BY md5(text)
-    ORDER BY text_hash
-    """,
-    description="Exact dedup: hash-groupBy with representative selection",
-    tags=("dedup",),
-)
-def exact_dup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    return D.exact_dup_groups(t["documents"]).orderBy("text_hash")
-
-
-@register(
-    "minhash_lsh_pairs",
-    f"""
-    WITH {GRAMS_CTE}, {SIGS_CTE},
-    cand AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a
-        JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
-                    AND a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM grams GROUP BY doc_id),
-    common AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS common
-        FROM grams a JOIN grams b ON a.gram = b.gram AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT c.id_a, c.id_b, sa.n AS n_a, sb.n AS n_b, cm.common
-    FROM cand c
-    JOIN common cm ON cm.id_a = c.id_a AND cm.id_b = c.id_b
-    JOIN sizes sa ON sa.doc_id = c.id_a
-    JOIN sizes sb ON sb.doc_id = c.id_b
-    ORDER BY c.id_a, c.id_b
-    """,
-    description="MinHash+LSH near-dup: shingle → k min-hash sigs → banded "
-    "bucket join → exact-Jaccard verify counts (integer-exact)",
-    tags=("dedup", "lsh"),
-)
-def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    # NOTE: deliberately NOT cached — persisting the exploded gram frame
-    # breaks whole-stage fusion of shingle-gen into the signature partial
-    # aggregation and measured 2x slower than recomputing the branches
-    grams = D.shingles(t["documents"])
-    cand = D.candidate_pairs(D.lsh_bands(grams))
-    return D.jaccard_counts(grams, pairs=cand).orderBy("id_a", "id_b")
 
 
 @register(
@@ -253,33 +178,9 @@ def simhash_near_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
-    "ann_topk_bruteforce",
-    ANN_TOPK_ORACLE,
-    description="Exact cosine top-10 for 5 probes (quantized int contract); "
-    "broadcast probes, scan-side scoring",
-    tags=("similarity",),
-)
-def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["embeddings"])
-    return S.brute_force_topk(t["embeddings"], ANN_PROBE_IDS, ANN_K).orderBy("probe_id", "rank")
-
-
-@register_extra(
-    "ann_topk_pandas",
-    ANN_TOPK_ORACLE,
-    description="Same contract via Arrow-batched mapInPandas + numpy int64 "
-    "GEMM — the vectorized-UDF scale path, bit-identical to the SQL form",
-    tags=("similarity", "pandas_udf"),
-)
-def ann_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["embeddings"])
-    return S.brute_force_topk_pandas(t["embeddings"], ANN_PROBE_IDS, ANN_K).orderBy("probe_id", "rank")
-
-
-@register_extra(
-    "ann_topk_lsh",
-    f"""
+#: Shared by ann_topk_lsh_ball: the Hamming-ball equi-join produces the
+#: same candidate set as this radius-1 bit_count(xor) nested-loop form.
+ANN_TOPK_LSH_ORACLE = f"""
     WITH {_quant_cte()},
     buckets AS (
         SELECT n.vec_id, n.qvec, n.qnorm,
@@ -308,66 +209,27 @@ def ann_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT probe_id, vec_id, dot_q, cosine, rank
     FROM ranked WHERE rank <= {ANN_K}
     ORDER BY probe_id, rank
-    """,
-    description="LSH-bucketed ANN: 8 fixed random-hyperplane sign bits, "
-    "multi-probe radius 1 — the 100 TB path (bucket computed scan-side)",
-    tags=("similarity", "lsh"),
-)
-def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["embeddings"])
-    return S.lsh_bucketed_topk(t["embeddings"], ANN_PROBE_IDS, ANN_K).orderBy("probe_id", "rank")
-
-
-def _register_lsh_ball():
-    # Same candidate set by construction → shares ann_topk_lsh's oracle SQL
-    # (registered just above), so the driver hash-checks that the equi-join
-    # shape reproduces the nested-loop shape exactly.
-    @register_extra(
-        "ann_topk_lsh_ball",
-        EXTRA_REGISTRY["ann_topk_lsh"].oracle,
-        description="Multi-probe LSH ANN via probe-side Hamming-ball "
-        "expansion + equi-join on bucket — the many-probe scale path (the "
-        "bit_count(xor) nested-loop in ann_topk_lsh evaluates every "
-        "probe x row combination; this shape hash-joins and produces "
-        "identical results)",
-        tags=("similarity", "lsh"),
-    )
-    def ann_topk_lsh_ball(spark: SparkSession, sf_dir: str) -> DataFrame:
-        t = load_tables(spark, sf_dir, ["embeddings"])
-        return S.lsh_bucketed_topk_ball(t["embeddings"], ANN_PROBE_IDS, ANN_K).orderBy(
-            "probe_id", "rank"
-        )
-
-
-_register_lsh_ball()
+    """
 
 
 @register(
-    "embedding_near_dup_pairs",
-    f"""
-    WITH {_quant_cte()},
-    pairs AS (
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-               CAST(list_sum(list_transform(range(1, len(a.qvec) + 1), i -> a.qvec[i] * b.qvec[i])) AS BIGINT) AS dot_q,
-               a.qnorm AS na, b.qnorm AS nb
-        FROM n a JOIN n b ON a.vec_id < b.vec_id
-    )
-    SELECT id_a, id_b, dot_q / sqrt(CAST(na * nb AS DOUBLE)) AS cosine
-    FROM pairs
-    WHERE dot_q > 0 AND CAST(dot_q AS DOUBLE) * CAST(dot_q AS DOUBLE) >= 0.1225 * CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)
-    ORDER BY id_a, id_b
-    """,
-    description="Embedding near-dup pairs: cosine ≥ 0.35 via squared "
-    "cross-multiplication (sign-guarded, no sqrt in the predicate); "
-    "distributed block-pair GEMM — nothing collected to the driver",
-    tags=("dedup", "similarity"),
+    "ann_topk_lsh_ball",
+    ANN_TOPK_LSH_ORACLE,
+    description="Multi-probe LSH ANN via probe-side Hamming-ball "
+    "expansion + equi-join on bucket — the many-probe scale path (the "
+    "bit_count(xor) nested-loop in the oracle evaluates every "
+    "probe x row combination; this shape hash-joins and produces "
+    "identical results)",
+    tags=("similarity", "lsh"),
 )
-def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+def ann_topk_lsh_ball(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["embeddings"])
-    return S.near_dup_pairs_blocked(t["embeddings"], min_cosine=0.35).orderBy("id_a", "id_b")
+    return S.lsh_bucketed_topk_ball(t["embeddings"], ANN_PROBE_IDS, ANN_K).orderBy(
+        "probe_id", "rank"
+    )
 
 
-@register_extra(
+@register(
     "near_dup_pairs_lsh",
     f"""
     WITH {_quant_cte()},
@@ -404,35 +266,6 @@ def near_dup_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Text analysis queries
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "doc_token_stats",
-    f"""
-    SELECT doc_id,
-           len(string_split(text, ' ')) AS n_ws_tokens,
-           len(regexp_extract_all(text, '{TX.WORD_TOKEN_PATTERN}')) AS n_word_tokens,
-           length(text) AS n_chars_m
-    FROM documents
-    ORDER BY doc_id
-    """,
-    description="Token counting: whitespace + BPE-ish regex tokenizer",
-    tags=("text",),
-)
-def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    return (
-        t["documents"]
-        .select(
-            "doc_id",
-            TX.token_count("text").alias("n_ws_tokens"),
-            F.expr(f"size(regexp_extract_all(text, '{TX.WORD_TOKEN_PATTERN}', 0))")
-            .cast("long")
-            .alias("n_word_tokens"),
-            F.length("text").cast("long").alias("n_chars_m"),
-        )
-        .orderBy("doc_id")
-    )
 
 
 def _langid_scored_cte() -> str:
@@ -535,25 +368,6 @@ def doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "doc_fingerprints",
-    """
-    SELECT doc_id,
-           md5(lower(regexp_replace(trim(text), ' +', ' ', 'g'))) AS fp_exact,
-           md5(array_to_string(list_sort(list_distinct(
-               string_split(lower(regexp_replace(trim(text), ' +', ' ', 'g')), ' '))), ' ')) AS fp_content
-    FROM documents
-    ORDER BY doc_id
-    """,
-    description="Document fingerprints: normalized-text md5 + order-"
-    "insensitive sorted-token-set md5",
-    tags=("text", "dedup"),
-)
-def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    return TX.fingerprints(t["documents"]).select("doc_id", "fp_exact", "fp_content").orderBy("doc_id")
-
-
-@register_extra(
     "embedding_norm_stats",
     f"""
     WITH {_quant_cte()}
@@ -599,73 +413,6 @@ def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "media_decode_stats",
-    """
-    WITH ids AS (SELECT doc_id FROM documents),
-    bi AS (SELECT UNNEST(generate_series(0, 71)) AS i),
-    bmp AS (
-        SELECT doc_id AS media_id, 'image' AS kind, 6 AS width, 4 AS height,
-               CAST(NULL AS INTEGER) AS sample_rate, 72 AS n_units,
-               CAST(SUM((doc_id * 31 + i) % 256) AS BIGINT) AS byte_sum,
-               CAST(SUM(CASE WHEN i % 3 = 0 THEN (doc_id * 31 + i) % 256 END) AS BIGINT) AS c0_sum,
-               CAST(NULL AS INTEGER) AS max_sample
-        FROM ids, bi GROUP BY doc_id
-    ),
-    wi AS (SELECT UNNEST(generate_series(0, 63)) AS i),
-    wav AS (
-        SELECT doc_id AS media_id, 'audio' AS kind, CAST(NULL AS INTEGER) AS width,
-               CAST(NULL AS INTEGER) AS height, 16000 AS sample_rate, 64 AS n_units,
-               CAST(SUM(ABS(((doc_id * 7 + i * 13) % 65536) - 32768)) AS BIGINT) AS byte_sum,
-               CAST(NULL AS BIGINT) AS c0_sum,
-               CAST(MAX(((doc_id * 7 + i * 13) % 65536) - 32768) AS INTEGER) AS max_sample
-        FROM ids, wi GROUP BY doc_id
-    )
-    SELECT * FROM bmp UNION ALL SELECT * FROM wav ORDER BY media_id, kind
-    """,
-    description="REAL multimodal decode: deterministic BMP/WAV payloads "
-    "synthesized per doc_id, parsed back by pure-numpy header-walking "
-    "codecs in mapInPandas; the oracle recomputes the decoded features "
-    "from the integer byte formula without ever seeing the payloads",
-    tags=("multimodal", "pandas_udf"),
-)
-def media_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from retail_aws_etl_pipeline_spark.operators import multimodal as MM
-    from retail_aws_etl_pipeline_spark.session import spread_for_compute
-
-    from retail_aws_etl_pipeline_spark.session import PY_KERNEL_MAX_PARTS
-
-    # full-decode kernels (see png_decode_stats) — spread; probes stay 1-task
-    ids = spread_for_compute(
-        load_tables(spark, sf_dir, ["documents"])["documents"].select("doc_id"),
-        max_parts=PY_KERNEL_MAX_PARTS,
-        keys=["doc_id"],
-    )
-    bmp = MM.decode_bmp_stats(MM.synth_media(ids, "doc_id", "image")).select(
-        "media_id",
-        F.lit("image").alias("kind"),
-        "width",
-        "height",
-        F.lit(None).cast("int").alias("sample_rate"),
-        "n_units",
-        "byte_sum",
-        "c0_sum",
-        F.lit(None).cast("int").alias("max_sample"),
-    )
-    wav = MM.decode_wav_stats(MM.synth_media(ids, "doc_id", "audio")).select(
-        "media_id",
-        F.lit("audio").alias("kind"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        "sample_rate",
-        "n_units",
-        F.col("abs_sum").alias("byte_sum"),
-        F.lit(None).cast("long").alias("c0_sum"),
-        "max_sample",
-    )
-    return bmp.unionByName(wav).orderBy("media_id", "kind")
-
-
-@register_extra(
     "png_decode_stats",
     """
     WITH ids AS (SELECT doc_id FROM documents),
@@ -701,31 +448,7 @@ def png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return MM.decode_png_stats(MM.synth_media(ids, "doc_id", "png")).orderBy("media_id")
 
 
-@register_extra(
-    "media_dims_probe",
-    """
-    SELECT doc_id AS media_id,
-           CASE doc_id % 3 WHEN 0 THEN 'jpeg' WHEN 1 THEN 'png' ELSE 'gif' END AS format,
-           CAST(16 + doc_id % 100 AS INT) AS width,
-           CAST(9 + (doc_id * 7) % 100 AS INT) AS height
-    FROM documents ORDER BY media_id
-    """,
-    description="Lib-free image METADATA probe: (format, width, height) "
-    "parsed from JPEG SOF / PNG IHDR / GIF screen-descriptor header bytes "
-    "alone — no pixel decode, O(header) bytes touched per payload. The "
-    "synth side writes per-id dims into real headers (meta stays NULL), so "
-    "the probe provably parses bytes; the oracle recomputes dims from the "
-    "id formula without seeing payloads",
-    tags=("multimodal", "pandas_udf", "metadata"),
-)
-def media_dims_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from retail_aws_etl_pipeline_spark.operators import multimodal as MM
-
-    ids = load_tables(spark, sf_dir, ["documents"])["documents"].select("doc_id")
-    return MM.probe_dims(MM.synth_header_media(ids, "doc_id")).orderBy("media_id")
-
-
-@register_extra(
+@register(
     "audio_meta_probe",
     """
     SELECT doc_id AS media_id,
@@ -750,7 +473,7 @@ def audio_meta_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return MM.probe_audio(MM.synth_audio_meta_media(ids, "doc_id")).orderBy("media_id")
 
 
-@register_extra(
+@register(
     "video_meta_probe",
     """
     SELECT doc_id AS media_id,
@@ -800,7 +523,7 @@ def _mixture_oracle() -> str:
     """
 
 
-@register_extra(
+@register(
     "corpus_mixture_sample",
     _mixture_oracle(),
     description="Corpus-mixture resampling (pretraining data mixing): each "
@@ -815,60 +538,6 @@ def corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(spark, sf_dir, ["documents"])
     return SMP.mixture_sample(t["documents"]).select("doc_id", "lang").orderBy("doc_id")
-
-
-#: A word 3-gram present in at least this many docs counts as boilerplate
-#: (the 99th-percentile doc-frequency of the synthetic corpus; production
-#: corpora would set this as a fraction of corpus size, not an absolute).
-BOILERPLATE_MIN_DOCS = 4
-
-
-@register_extra(
-    "boilerplate_ngram_ratio",
-    f"""
-    WITH {GRAMS_CTE},
-    gdf AS (
-        SELECT doc_id, gram, COUNT(*) OVER (PARTITION BY gram) AS df
-        FROM grams
-    )
-    SELECT doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_grams,
-           CAST(SUM(CASE WHEN df >= {BOILERPLATE_MIN_DOCS} THEN 1 ELSE 0 END) AS BIGINT) AS n_boiler,
-           CAST(SUM(CASE WHEN df >= {BOILERPLATE_MIN_DOCS} THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*) AS boiler_ratio
-    FROM gdf GROUP BY doc_id ORDER BY doc_id
-    """,
-    description="Corpus-level boilerplate signal (the C4 repeated-span "
-    "filter re-expressed for word-stream docs): per doc, the share of its "
-    "distinct 3-grams whose corpus document-frequency is >= "
-    f"{BOILERPLATE_MIN_DOCS} — complements doc_repetition_ratio "
-    "(within-doc) with a cross-doc frequency lens; filter = WHERE on the "
-    "ratio. One gram-partition window + one doc groupBy (two shuffles, no "
-    "agg-join round trip)",
-    tags=("text", "quality", "curation"),
-)
-def boilerplate_ngram_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    t = load_tables(spark, sf_dir, ["documents"])
-    g = D.shingles(t["documents"])
-    gdf = g.withColumn("df", F.count(F.lit(1)).over(W.partitionBy("gram")))
-    boiler = F.sum(
-        F.when(F.col("df") >= BOILERPLATE_MIN_DOCS, 1).otherwise(0)
-    ).cast("long")
-    return (
-        gdf.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_grams"),
-            boiler.alias("n_boiler"),
-        )
-        .select(
-            "doc_id",
-            "n_grams",
-            "n_boiler",
-            (F.col("n_boiler").cast("double") / F.col("n_grams")).alias("boiler_ratio"),
-        )
-        .orderBy("doc_id")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -909,7 +578,7 @@ def _pii_oracle() -> str:
     """
 
 
-@register_extra(
+@register(
     "pii_scrub_stats",
     _pii_oracle(),
     description="PII detection + redaction (emails, SSNs, phone numbers, "
@@ -947,7 +616,7 @@ def pii_scrub_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-@register_extra(
+@register(
     "decimal_money_totals",
     """
     SELECT l_returnflag,
@@ -976,7 +645,7 @@ def decimal_money_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_extra(
+@register(
     "media_byte_histogram",
     """
     WITH ascii_docs AS (
@@ -1004,96 +673,10 @@ def media_byte_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return MM.byte_histogram(media).orderBy("media_id", "byte")
 
 
-@register_extra(
-    "ann_lsh_recall",
-    f"""
-    WITH {_quant_cte()},
-    epairs AS (
-        SELECT p.vec_id AS probe_id, c.vec_id,
-               CAST(list_sum(list_transform(range(1, len(p.qvec) + 1), i -> p.qvec[i] * c.qvec[i])) AS BIGINT) AS dot_q,
-               p.qnorm AS pn, c.qnorm AS cn
-        FROM n p, n c
-        WHERE p.vec_id IN ({", ".join(map(str, ANN_PROBE_IDS))}) AND c.vec_id != p.vec_id
-    ),
-    exact_topk AS (
-        SELECT probe_id, vec_id FROM (
-            SELECT probe_id, vec_id,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY probe_id
-                       ORDER BY dot_q / sqrt(CAST(pn * cn AS DOUBLE)) DESC, vec_id ASC) AS rank
-            FROM epairs
-        ) WHERE rank <= {ANN_K}
-    ),
-    buckets AS (
-        SELECT n.vec_id, n.qvec, n.qnorm,
-               CAST(SUM(CASE WHEN CAST(list_sum(list_transform(range(1, len(n.qvec) + 1),
-                        i -> n.qvec[i] * w[i])) AS BIGINT) >= 0
-                        THEN 1 << p ELSE 0 END) AS BIGINT) AS bucket
-        FROM n, {_planes_values()}
-        GROUP BY n.vec_id, n.qvec, n.qnorm
-    ),
-    lsh_topk AS (
-        SELECT probe_id, vec_id FROM (
-            SELECT p.vec_id AS probe_id, c.vec_id,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY p.vec_id
-                       ORDER BY CAST(list_sum(list_transform(range(1, len(p.qvec) + 1), i -> p.qvec[i] * c.qvec[i])) AS BIGINT)
-                                / sqrt(CAST(p.qnorm * c.qnorm AS DOUBLE)) DESC, c.vec_id ASC) AS rank
-            FROM buckets p
-            JOIN buckets c ON bit_count(xor(p.bucket, c.bucket)) <= 1 AND c.vec_id != p.vec_id
-            WHERE p.vec_id IN ({", ".join(map(str, ANN_PROBE_IDS))})
-        ) WHERE rank <= {ANN_K}
-    )
-    SELECT e.probe_id,
-           COUNT(l.vec_id) AS n_common,
-           COUNT(l.vec_id) / {float(ANN_K)} AS recall
-    FROM exact_topk e
-    LEFT JOIN lsh_topk l ON l.probe_id = e.probe_id AND l.vec_id = e.vec_id
-    GROUP BY e.probe_id
-    ORDER BY e.probe_id
-    """,
-    description="ANN self-evaluation: recall@10 of the LSH-bucketed index "
-    "against the exact scan — the quality/latency dial, measured in-engine",
-    tags=("similarity", "lsh", "evaluation"),
-)
-def ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from retail_aws_etl_pipeline_spark.operators.dedup import _truncate_lineage
-
-    t = load_tables(spark, sf_dir, ["embeddings"])
-    # ONE shared quantize+bucket pass: both the exact baseline and the LSH
-    # leg read the same materialized base (with_quantized/with_lsh_bucket
-    # pass through stored columns), so the corpus is projected once
-    # instead of once per branch — the same shared-base discipline as
-    # ann_recall_sweep, and the shape that matters at corpus scale where
-    # the projection pass IS the cost.
-    base = _truncate_lineage(
-        S.with_lsh_bucket(S.with_quantized(t["embeddings"])).select(
-            "vec_id", "qvec", "qnorm", "bucket"
-        ),
-        "auto",
-    )
-    exact = S.brute_force_topk(base, ANN_PROBE_IDS, ANN_K).select("probe_id", "vec_id")
-    lsh = (
-        S.lsh_bucketed_topk(base, ANN_PROBE_IDS, ANN_K)
-        .select(F.col("probe_id").alias("l_probe"), F.col("vec_id").alias("l_vec"))
-    )
-    joined = exact.join(
-        lsh, (F.col("probe_id") == F.col("l_probe")) & (F.col("vec_id") == F.col("l_vec")), "left"
-    )
-    return (
-        joined.groupBy("probe_id")
-        .agg(F.count("l_vec").alias("n_common"))
-        .select(
-            "probe_id", "n_common", (F.col("n_common") / F.lit(float(ANN_K))).alias("recall")
-        )
-        .orderBy("probe_id")
-    )
-
-
 WINNOW_WINDOW = 4  # k-gram window for winnowing (MOSS-style)
 
 
-@register_extra(
+@register(
     "doc_winnowing",
     f"""
     WITH toks AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
@@ -1153,7 +736,7 @@ def doc_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_extra(
+@register(
     "sketch_accuracy_stats",
     """
     SELECT l_returnflag,
@@ -1180,9 +763,10 @@ def doc_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     "an unbounded continuous domain swap the window for the two-level "
     "rank used by customer_spend_deciles. This is the hash-checkable "
     "driver query; the sketch kernels (approx_count_distinct / "
-    "approx_percentile) stay the 100 TB knob and are tolerance-gated "
-    "against this exact frame in "
-    "tests/test_extensions.py::test_approx_sketch_within_tolerance.",
+    "approx_percentile) stay the 100 TB knob; approx_count_distinct is "
+    "held to the HLL error band in "
+    "tests/test_r15_twin_equivalence.py::"
+    "test_hll_supersedes_the_retired_approx_sketch.",
     tags=("agg", "exact"),
 )
 def sketch_accuracy_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1218,43 +802,6 @@ def sketch_accuracy_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         distinct.join(quantiles, "l_returnflag")
         .select("l_returnflag", "distinct_parts", "p50", "p90", "p99", "n")
-        .orderBy("l_returnflag")
-    )
-
-
-@register_extra(
-    "approx_sketch_stats",
-    None,  # sketches are engine-specific by nature -> local tolerance gate
-    description="Approximate aggregates (HLL distinct + GK quantiles) — the "
-    "100 TB knob for A2-style counters. Deliberately NOT driver-facing "
-    "(sketch internals differ per engine, so no hash oracle can exist); its "
-    "accuracy is proven two ways instead: the exact twin "
-    "sketch_accuracy_stats is hash-checked by the driver, and "
-    "tests/test_extensions.py::test_approx_sketch_within_tolerance gates "
-    "|approx-exact|/exact against the configured rsd/accuracy bounds. "
-    "Quantiles are projected to scalar p50/p90/p99 columns (flat schema — "
-    "array cells don't survive result canonicalizers that sort rows).",
-    tags=("agg", "approx"),
-)
-def approx_sketch_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["lineitem"])
-    q = F.expr("approx_percentile(l_extendedprice, array(0.5, 0.9, 0.99))")
-    return (
-        t["lineitem"]
-        .groupBy("l_returnflag")
-        .agg(
-            F.approx_count_distinct("l_partkey", 0.01).alias("approx_parts"),
-            q.alias("price_quantiles"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .select(
-            "l_returnflag",
-            "approx_parts",
-            F.col("price_quantiles")[0].alias("p50"),
-            F.col("price_quantiles")[1].alias("p90"),
-            F.col("price_quantiles")[2].alias("p99"),
-            "n",
-        )
         .orderBy("l_returnflag")
     )
 
@@ -1412,27 +959,6 @@ def _ivf_oracle(sf_dir: str = "/root/testdata/sf0.01") -> str | None:
     """
 
 
-@register(
-    "ann_topk_ivf",
-    _ivf_oracle(),
-    description="IVF ANN: deterministic integer k-means coarse quantizer "
-    "(fit on a deterministic systematic SAMPLE — no full-corpus collect; "
-    "centroids broadcast as literals), candidates = the probe's nprobe "
-    "nearest cells — the clustered alternative to hyperplane LSH",
-    tags=("similarity", "ivf"),
-)
-def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    t = load_tables(spark, sf_dir, ["embeddings"])
-    cents = S.ivf_centroids_from_parquet(
-        os.path.join(sf_dir, "embeddings.parquet"), sample_mod=IVF_SAMPLE_MOD
-    )
-    return S.ivf_topk(
-        t["embeddings"], ANN_PROBE_IDS, ANN_K, centroids=cents, nprobe=IVF_NPROBE
-    ).orderBy("probe_id", "rank")
-
-
 #: Oracle for :func:`ann_topk_ivf_indexed` — IDENTICAL to ann_topk_ivf's by
 #: construction: the at-rest index persists the same quantization, the same
 #: deterministic centroid fit, and the same cell assignment the in-memory
@@ -1443,7 +969,7 @@ def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 IVF_INDEXED_ORACLE = _ivf_oracle()
 
 
-@register_extra(
+@register(
     "ann_topk_ivf_indexed",
     IVF_INDEXED_ORACLE,
     description="IVF ANN index AT REST: cell-partitioned parquet + "
@@ -1575,26 +1101,6 @@ _NEAR_DUP_CLUSTERS_ORACLE = f"""
     """
 
 
-def _near_dup_cluster_frame(spark: SparkSession, sf_dir: str, cc_impl) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    grams = D.shingles(t["documents"]).persist()
-    counts = D.jaccard_counts(grams)
-    pairs = counts.filter(
-        F.col("common") * 5 >= (F.col("n_a") + F.col("n_b") - F.col("common"))
-    ).select("id_a", "id_b")
-    comp = cc_impl(pairs, t["documents"].select("doc_id"))
-    csize = comp.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
-    return (
-        comp.join(csize, "label")
-        .select(
-            F.col("node").alias("doc_id"),
-            F.col("label").alias("cluster_id"),
-            "cluster_size",
-        )
-        .orderBy("doc_id")
-    )
-
-
 @register(
     "near_dup_clusters",
     _NEAR_DUP_CLUSTERS_ORACLE,
@@ -1605,20 +1111,23 @@ def _near_dup_cluster_frame(spark: SparkSession, sf_dir: str, cc_impl) -> DataFr
     tags=("dedup", "graph"),
 )
 def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _near_dup_cluster_frame(spark, sf_dir, D.connected_components)
-
-
-@register_extra(
-    "near_dup_clusters_star",
-    _NEAR_DUP_CLUSTERS_ORACLE,
-    description="Same clustering through the large-star/small-star "
-    "algorithm (O(log n) rounds independent of diameter; the dense-graph "
-    "scale path) — identical labeling, checked against the same "
-    "transitive-closure oracle",
-    tags=("dedup", "graph"),
-)
-def near_dup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _near_dup_cluster_frame(spark, sf_dir, D.connected_components_star)
+    t = load_tables(spark, sf_dir, ["documents"])
+    grams = D.shingles(t["documents"]).persist()
+    counts = D.jaccard_counts(grams)
+    pairs = counts.filter(
+        F.col("common") * 5 >= (F.col("n_a") + F.col("n_b") - F.col("common"))
+    ).select("id_a", "id_b")
+    comp = D.connected_components(pairs, t["documents"].select("doc_id"))
+    csize = comp.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
+    return (
+        comp.join(csize, "label")
+        .select(
+            F.col("node").alias("doc_id"),
+            F.col("label").alias("cluster_id"),
+            "cluster_size",
+        )
+        .orderBy("doc_id")
+    )
 
 
 def _split_oracle() -> str:
@@ -1697,7 +1206,7 @@ def _quality_filter_oracle() -> str:
     """
 
 
-@register_extra(
+@register(
     "quality_top_half_per_lang",
     _quality_filter_oracle(),
     description="Per-group quality filtering: keep each language's top "
@@ -1747,7 +1256,7 @@ def _packing_oracle() -> str:
     """
 
 
-@register_extra(
+@register(
     "sequence_packing_chunks",
     _packing_oracle(),
     description="Sequence packing: documents laid into a contiguous token "
@@ -1773,69 +1282,12 @@ def sequence_packing_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_extra(
-    "doc_repetition_ratio",
-    f"""
-    WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-    g AS (
-        SELECT doc_id,
-               greatest(len(toks) - {D.SHINGLE_N - 1}, 0) AS total_grams,
-               len(list_distinct(list_transform(
-                   range(1, greatest(len(toks) - {D.SHINGLE_N - 1}, 0) + 1),
-                   i -> array_to_string(toks[i:i + {D.SHINGLE_N - 1}], ' ')
-               ))) AS distinct_grams
-        FROM t
-    )
-    SELECT doc_id, CAST(total_grams AS BIGINT) AS total_grams,
-           CAST(distinct_grams AS BIGINT) AS distinct_grams,
-           CASE WHEN total_grams = 0 THEN 0.0
-                ELSE 1.0 - CAST(distinct_grams AS DOUBLE) / total_grams
-           END AS repetition_ratio
-    FROM g
-    ORDER BY doc_id
-    """,
-    description="Within-document repetition: 1 - distinct/total word "
-    "3-grams (the Gopher-style boilerplate/repetition quality signal); "
-    "pure scan-side array expressions, no shuffle",
-    tags=("text", "quality"),
-)
-def doc_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    n = D.SHINGLE_N
-    # size guard (the shingles-kernel lesson, r12): sequence(1, 0) is
-    # descending, so short docs need the explicit empty branch.
-    grams = (
-        f"CASE WHEN size(__toks) >= {n} THEN"
-        f" transform(sequence(1, size(__toks) - {n - 1}),"
-        f" i -> concat_ws(' ', slice(__toks, i, {n})))"
-        " ELSE array() END"
-    )
-    return (
-        t["documents"]
-        .withColumn("__toks", F.split("text", " "))
-        .select(
-            "doc_id",
-            F.greatest(F.size("__toks") - (n - 1), F.lit(0))
-            .cast("long")
-            .alias("total_grams"),
-            F.size(F.array_distinct(F.expr(grams))).cast("long").alias("distinct_grams"),
-        )
-        .withColumn(
-            "repetition_ratio",
-            F.when(F.col("total_grams") == 0, F.lit(0.0)).otherwise(
-                1.0 - F.col("distinct_grams").cast("double") / F.col("total_grams")
-            ),
-        )
-        .orderBy("doc_id")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Curation audits: decontamination, vocabulary, split leakage
 # ---------------------------------------------------------------------------
 
 
-@register_extra(
+@register(
     "benchmark_contamination",
     f"""
     WITH {GRAMS_CTE},
@@ -1862,134 +1314,6 @@ def benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("shared_grams"))
         .orderBy("doc_id")
-    )
-
-
-@register_extra(
-    "corpus_vocabulary",
-    """
-    WITH toks AS (
-        SELECT doc_id, UNNEST(string_split(text, ' ')) AS tok FROM documents
-    )
-    SELECT tok, CAST(COUNT(*) AS BIGINT) AS n_total,
-           CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs
-    FROM toks
-    WHERE tok <> ''
-    GROUP BY tok
-    ORDER BY n_total DESC, tok
-    LIMIT 200
-    """,
-    description="Corpus vocabulary: token totals + document frequency, "
-    "top-200 (map-side-combined groupBy over the exploded token stream; "
-    "the input to tokenizer/BPE corpus statistics)",
-    tags=("text", "curation"),
-)
-def corpus_vocabulary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    return (
-        t["documents"]
-        .select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
-        .filter(F.col("tok") != "")
-        .groupBy("tok")
-        .agg(
-            F.count(F.lit(1)).alias("n_total"),
-            F.count_distinct("doc_id").alias("n_docs"),
-        )
-        .orderBy(F.desc("n_total"), F.asc("tok"))
-        .limit(200)
-    )
-
-
-def _leakage_oracle() -> str:
-    from retail_aws_etl_pipeline_spark.operators import sampling as SMP
-
-    def split_sql(id_expr: str) -> str:
-        def nib(i: int) -> str:
-            return (
-                f"(strpos('0123456789abcdef',"
-                f" substr(md5(CAST({id_expr} AS VARCHAR)), {i}, 1)) - 1)"
-            )
-
-        bucket = (
-            f"(({nib(1)} * 4096 + {nib(2)} * 256 + {nib(3)} * 16 + {nib(4)})"
-            f" % {SMP.SPLIT_BUCKETS})"
-        )
-        return (
-            f"CASE WHEN {bucket} < {SMP.TRAIN_BUCKETS} THEN 'train'"
-            f" WHEN {bucket} < {SMP.TRAIN_BUCKETS + SMP.VALID_BUCKETS} THEN 'valid'"
-            f" ELSE 'test' END"
-        )
-
-    return f"""
-    WITH {GRAMS_CTE},
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM grams GROUP BY doc_id),
-    common AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS common
-        FROM grams a JOIN grams b ON a.gram = b.gram AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    ),
-    prs AS (
-        SELECT cm.id_a, cm.id_b
-        FROM common cm
-        JOIN sizes sa ON sa.doc_id = cm.id_a
-        JOIN sizes sb ON sb.doc_id = cm.id_b
-        WHERE cm.common * 5 >= (sa.n + sb.n - cm.common)
-    )
-    SELECT {split_sql('p.id_a')} AS split_a, {split_sql('p.id_b')} AS split_b,
-           CAST(COUNT(*) AS BIGINT) AS n_pairs
-    FROM prs p
-    WHERE {split_sql('p.id_a')} <> {split_sql('p.id_b')}
-    GROUP BY 1, 2
-    ORDER BY 1, 2
-    """
-
-
-@register(
-    "split_leakage_pairs",
-    _leakage_oracle(),
-    description="Split-leakage audit: near-dup pairs (n-gram Jaccard ≥ "
-    "0.2) whose endpoints fall in different train/valid/test splits — "
-    "the contamination check run before training; split is a scan-side "
-    "pure function of doc_id (no join against an assignment table)",
-    tags=("dedup", "curation"),
-)
-def split_leakage_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from retail_aws_etl_pipeline_spark.operators import sampling as SMP
-
-    def split_of(c: str):
-        hx = F.conv(F.substring(F.md5(F.col(c).cast("string")), 1, 4), 16, 10)
-        b = hx.cast("long") % SMP.SPLIT_BUCKETS
-        return (
-            F.when(b < SMP.TRAIN_BUCKETS, F.lit("train"))
-            .when(b < SMP.TRAIN_BUCKETS + SMP.VALID_BUCKETS, F.lit("valid"))
-            .otherwise(F.lit("test"))
-        )
-
-    t = load_tables(spark, sf_dir, ["documents"])
-    grams = D.shingles(t["documents"]).persist()
-    counts = D.jaccard_counts(grams)
-    # The checkpoint is a deliberate optimization BARRIER, not just a
-    # materialization: without it Catalyst pushes the md5-split predicate
-    # below the pair aggregation INTO the gram self-join condition, where
-    # it evaluates per joined gram row instead of per pair (measured 2.2x
-    # on the whole query). The near-dup pair list is tiny relative to the
-    # corpus — materializing it is what an audit would do anyway. Routed
-    # through _truncate_lineage("auto") so cluster sessions with a
-    # checkpoint dir get the executor-loss-safe reliable path.
-    pairs = D._truncate_lineage(
-        counts.filter(
-            F.col("common") * 5 >= (F.col("n_a") + F.col("n_b") - F.col("common"))
-        ).select("id_a", "id_b"),
-        "auto",
-    )
-    return (
-        pairs.select(
-            split_of("id_a").alias("split_a"), split_of("id_b").alias("split_b")
-        )
-        .filter(F.col("split_a") != F.col("split_b"))
-        .groupBy("split_a", "split_b")
-        .agg(F.count(F.lit(1)).alias("n_pairs"))
-        .orderBy("split_a", "split_b")
     )
 
 
@@ -2185,7 +1509,7 @@ def _recall_sweep_oracle(sf_dir: str = "/root/testdata/sf0.01") -> str | None:
     """
 
 
-@register_extra(
+@register(
     "ann_recall_sweep",
     _recall_sweep_oracle(),
     description="ANN quality/selectivity sweep: recall@10 AND candidate-set "
@@ -2383,102 +1707,6 @@ def ann_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: Containment threshold (percent) for doc_containment_pairs.
 CONTAINMENT_PCT = 90
 
-#: Fixed query-term set for bm25_query_scores — chosen for df spread in the
-#: synthetic corpus (two common terms, one rare) so the idf weights differ
-#: by >10x and the ranking genuinely exercises the rarity weighting.
-BM25_TERMS = ("join", "window", "dup")
-
-
-@register_extra(
-    "doc_containment_pairs",
-    f"""
-    WITH {GRAMS_CTE},
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM grams GROUP BY doc_id),
-    common AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS common
-        FROM grams a JOIN grams b ON a.gram = b.gram AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT cm.id_a, cm.id_b, sa.n AS n_a, sb.n AS n_b, cm.common,
-           CAST(cm.common AS DOUBLE) / LEAST(sa.n, sb.n) AS containment
-    FROM common cm
-    JOIN sizes sa ON sa.doc_id = cm.id_a
-    JOIN sizes sb ON sb.doc_id = cm.id_b
-    WHERE cm.common * 100 >= {CONTAINMENT_PCT} * LEAST(sa.n, sb.n)
-    ORDER BY cm.id_a, cm.id_b
-    """,
-    description="Asymmetric containment dedup: pairs where the smaller "
-    "document's shingle set is ≥ 90% inside the other — the quote/excerpt "
-    "duplication Jaccard under-scores when sizes differ. Same banded "
-    "inverted-index join as the Jaccard family (never all-pairs); "
-    "integer-percent threshold, one double division for the emitted ratio.",
-    tags=("dedup", "containment"),
-)
-def doc_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    # persist: jaccard_counts reads the shingle frame three times (sizes +
-    # both self-join sides) — same idiom as ngram_jaccard_pairs
-    grams = D.shingles(t["documents"]).persist()
-    return D.containment_pairs(grams, threshold_pct=CONTAINMENT_PCT).orderBy(
-        "id_a", "id_b"
-    )
-
-
-def _bm25_oracle() -> str:
-    from retail_aws_etl_pipeline_spark.operators.textops import BM25_IDF_SCALE
-
-    tf_exprs = ", ".join(
-        f"len(list_filter(string_split(text, ' '), x -> x = '{t}')) AS tf_{i}"
-        for i, t in enumerate(BM25_TERMS)
-    )
-    contrib = " + ".join(
-        f"((N * {BM25_IDF_SCALE}) // (df_{i} + 1))"
-        f" * (CAST(10 * tf_{i} * T AS DOUBLE) / (10 * tf_{i} * T + 3 * T + 9 * dl * N))"
-        for i in range(len(BM25_TERMS))
-    )
-    any_hit = " + ".join(f"tf_{i}" for i in range(len(BM25_TERMS)))
-    df_aggs = ", ".join(
-        f"SUM(CASE WHEN tf_{i} > 0 THEN 1 ELSE 0 END) AS df_{i}"
-        for i in range(len(BM25_TERMS))
-    )
-    return f"""
-    WITH per_doc AS (
-        SELECT doc_id, len(string_split(text, ' ')) AS dl, {tf_exprs}
-        FROM documents
-    ),
-    stats AS (
-        SELECT COUNT(*) AS N, SUM(dl) AS T, {df_aggs} FROM per_doc
-    )
-    SELECT doc_id, dl, {contrib} AS score
-    FROM per_doc, stats
-    WHERE {any_hit} > 0
-    ORDER BY score DESC, doc_id
-    LIMIT 50
-    """
-
-
-@register_extra(
-    "bm25_query_scores",
-    _bm25_oracle(),
-    description="BM25-shaped top-50 relevance against a fixed term set, "
-    "with a rational idf surrogate ((N*SCALE) div (df+1)) — ln() is "
-    "engine-divergent in final ulps, the rational weight keeps every "
-    "operand integer so the only doubles are one division per term and a "
-    "fixed-order sum. Scan-side tf/dl (array exprs, no explode), ONE tiny "
-    "global stats agg broadcast back, TakeOrderedAndProject ranking: zero "
-    "wide shuffles at any corpus size.",
-    tags=("text", "relevance"),
-)
-def bm25_query_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from retail_aws_etl_pipeline_spark.operators.textops import bm25_scores
-
-    t = load_tables(spark, sf_dir, ["documents"])
-    return (
-        bm25_scores(t["documents"], BM25_TERMS)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(50)
-    )
-
 
 _RETAINED_CORPUS_ORACLE = f"""
     WITH RECURSIVE {GRAMS_CTE},
@@ -2517,7 +1745,7 @@ _RETAINED_CORPUS_ORACLE = f"""
     """
 
 
-@register_extra(
+@register(
     "dedup_retained_corpus",
     _RETAINED_CORPUS_ORACLE,
     description="The END of the dedup pipeline: the surviving corpus after "
@@ -2552,65 +1780,12 @@ def dedup_retained_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_extra(
-    "bpe_pair_stats",
-    """
-    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-    pairs AS (
-        SELECT doc_id, toks[i.i] AS tok_a, toks[i.i + 1] AS tok_b
-        FROM toks, UNNEST(generate_series(1, len(toks) - 1)) AS i(i)
-    )
-    SELECT tok_a, tok_b, CAST(COUNT(*) AS BIGINT) AS n_total,
-           CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs
-    FROM pairs
-    WHERE tok_a <> '' AND tok_b <> ''
-    GROUP BY tok_a, tok_b
-    ORDER BY n_total DESC, tok_a, tok_b
-    LIMIT 100
-    """,
-    description="BPE merge-candidate statistics (step 1 of tokenizer "
-    "training): corpus-wide adjacent-pair counts + document frequency, "
-    "top-100 with total tiebreak. Same map-side-combined explode->groupBy "
-    "shape as corpus_vocabulary, over pairs instead of unigrams — over a "
-    "byte-level pre-tokenization this IS the distributed inner loop of "
-    "BPE; each merge iteration re-runs it on the re-paired stream.",
-    tags=("text", "curation", "tokenizer"),
-)
-def bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    # size guard: sequence(1, 0) is DESCENDING [1, 0], so the greatest()
-    # idiom still indexes element 2 of a 1-element array on a
-    # single-token document (latent until the r10 BPE fuzz hit the same
-    # pattern in the trainer).
-    pairs_arr = (
-        "CASE WHEN size(__toks) >= 2 THEN"
-        " transform(sequence(1, size(__toks) - 1),"
-        " i -> struct(element_at(__toks, i) AS tok_a,"
-        " element_at(__toks, i + 1) AS tok_b))"
-        " ELSE array() END"
-    )
-    return (
-        t["documents"]
-        .withColumn("__toks", F.split("text", " "))
-        .select("doc_id", F.explode(F.expr(pairs_arr)).alias("p"))
-        .select("doc_id", "p.tok_a", "p.tok_b")
-        .filter((F.col("tok_a") != "") & (F.col("tok_b") != ""))
-        .groupBy("tok_a", "tok_b")
-        .agg(
-            F.count(F.lit(1)).alias("n_total"),
-            F.count_distinct("doc_id").alias("n_docs"),
-        )
-        .orderBy(F.desc("n_total"), F.asc("tok_a"), F.asc("tok_b"))
-        .limit(100)
-    )
-
-
 #: Deterministic "incoming batch" for the incremental-dedup query: every
 #: 10th document plays the new arrivals, the rest are the standing corpus.
 INCR_BATCH_MOD = 10
 
 
-@register_extra(
+@register(
     "incremental_near_dup_pairs",
     f"""
     WITH {GRAMS_CTE},
@@ -2711,7 +1886,7 @@ def _bm25_multi_oracle() -> str:
     """
 
 
-@register_extra(
+@register(
     "bm25_multi_query_topk",
     _bm25_multi_oracle(),
     description="Multi-query BM25 top-10 per query via a broadcast term "
@@ -2789,50 +1964,6 @@ _KMEANS_CTES = f"""
     {_kmeans_assign_cte("1", "c1")}
 """
 
-_KMEANS_ORACLE = f"""
-    {_KMEANS_CTES}
-    SELECT a.cid AS cluster_id, CAST(COUNT(*) AS BIGINT) AS n_vectors,
-           CAST(SUM(a.dist) AS BIGINT) AS inertia,
-           CAST(COUNT(DISTINCT v.label) AS BIGINT) AS n_labels,
-           CAST(MIN(a.vec_id) AS BIGINT) AS min_vec_id
-    FROM a1 a JOIN kq v ON v.vec_id = a.vec_id
-    GROUP BY a.cid
-    ORDER BY cluster_id
-    """
-
-
-@register_extra(
-    "kmeans_cluster_profile",
-    _KMEANS_ORACLE,
-    description="Distributed k-means over the embedding corpus "
-    "(SemDeDup-style topic blocking): Lloyd's with deterministic init "
-    "(k smallest vec_ids), integer-exact distances on the shared "
-    "quantized contract, and floor-division centroid updates that are "
-    "provably identical under IEEE double division — so a DuckDB oracle "
-    "unrolls the full two-assignment/one-update schedule bit-for-bit. "
-    "Assignment is a scan-side array_min(struct(dist, cid)) over an "
-    "inlined centroid literal (no join, no shuffle, whole-stage codegen); "
-    "the update is a map-side-combined k-row aggregate + bounded k-row "
-    "driver collect, the same per-iteration sync MLlib performs. Output "
-    "profiles each cluster: size, inertia, label diversity.",
-    tags=("embedding", "clustering", "curation"),
-)
-def kmeans_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["embeddings"])
-    emb = t["embeddings"]
-    assigned = C.kmeans_assign(emb)
-    return (
-        assigned.join(emb.select("vec_id", "label"), "vec_id")
-        .groupBy("cluster_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_vectors"),
-            F.sum("dist").alias("inertia"),
-            F.count_distinct("label").alias("n_labels"),
-            F.min("vec_id").alias("min_vec_id"),
-        )
-        .orderBy("cluster_id")
-    )
-
 
 _SEMDEDUP_TAU2 = C.SEMDEDUP_MIN_COSINE * C.SEMDEDUP_MIN_COSINE
 
@@ -2872,7 +2003,7 @@ _SEMDEDUP_ORACLE = f"""
     """
 
 
-@register_extra(
+@register(
     "semantic_dedup_retained",
     _SEMDEDUP_ORACLE,
     description="SemDeDup: greedy within-cluster semantic dedup over the "
@@ -2890,130 +2021,7 @@ def semantic_dedup_retained(spark: SparkSession, sf_dir: str) -> DataFrame:
     return C.semantic_dedup_retained(t["embeddings"])
 
 
-_CHUNK_DEDUP_ORACLE = f"""
-    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-    spans AS (
-        SELECT doc_id, j.j AS chunk_idx,
-               array_to_string(toks[j.j * {D.CHUNK_W} + 1 : j.j * {D.CHUNK_W} + {D.CHUNK_W}], ' ') AS chunk,
-               len(toks[j.j * {D.CHUNK_W} + 1 : j.j * {D.CHUNK_W} + {D.CHUNK_W}]) AS n_toks
-        FROM toks,
-             UNNEST(generate_series(
-                 0, CAST(ceil(len(toks) / {D.CHUNK_W}.0) AS INT) - 1)) AS j(j)
-    ),
-    flagged AS (
-        SELECT doc_id, chunk_idx, n_toks,
-               CASE WHEN ROW_NUMBER() OVER (
-                   PARTITION BY chunk ORDER BY doc_id, chunk_idx) = 1
-               THEN 1 ELSE 0 END AS retained
-        FROM spans
-    )
-    SELECT doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_chunks,
-           CAST(SUM(retained) AS BIGINT) AS n_retained,
-           CAST(SUM(n_toks) AS BIGINT) AS n_tokens,
-           CAST(SUM(CASE WHEN retained = 1 THEN n_toks ELSE 0 END) AS BIGINT)
-               AS n_tokens_retained
-    FROM flagged
-    GROUP BY doc_id
-    ORDER BY doc_id
-    """
-
-
-@register_extra(
-    "token_chunk_dedup",
-    _CHUNK_DEDUP_ORACLE,
-    description="C4/RefinedWeb-style span-level exact dedup: the corpus "
-    "splits into non-overlapping token spans and only each span's FIRST "
-    "occurrence (min (doc_id, chunk_idx), corpus-wide — so within-doc "
-    "repeats dedup too) survives; per-doc retention stats come back. One "
-    "shuffle keyed on the span text (groupBy + min-struct, map-side "
-    "combined to one row per distinct span) + the equi-join back — the "
-    "canonical content-hash-partitioned dedup; no windows on the Spark "
-    "side, no collects.",
-    tags=("dedup", "text", "curation"),
-)
-def token_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    return D.chunk_dedup_stats(t["documents"]).orderBy("doc_id")
-
-
-_FLUENCY_BOTTOM_K = 100
-
-_FLUENCY_ORACLE = f"""
-    WITH bi AS (
-        SELECT doc_id, substr(text, i.i, 2) AS bg
-        FROM documents, UNNEST(generate_series(1, len(text) - 1)) AS i(i)
-    ),
-    vocab AS (SELECT bg, COUNT(*) AS freq FROM bi GROUP BY bg),
-    perdoc AS (
-        SELECT b.doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-               CAST(SUM(v.freq) AS BIGINT) AS freq_sum
-        FROM bi b JOIN vocab v USING (bg)
-        GROUP BY b.doc_id
-    )
-    SELECT doc_id, n_bigrams, freq_sum
-    FROM perdoc
-    ORDER BY CAST(freq_sum AS DOUBLE) / n_bigrams ASC, doc_id ASC
-    LIMIT {_FLUENCY_BOTTOM_K}
-    """
-
-
-@register_extra(
-    "char_bigram_fluency",
-    _FLUENCY_ORACLE,
-    description="Corpus-LM fluency filter (the KenLM-perplexity quality "
-    "gate, integer-exact): the char-bigram frequency table IS the "
-    "language model — each doc scores the sum of corpus-wide frequencies "
-    "of its own bigrams, and the bottom-100 by mean frequency are the "
-    "least-corpus-like candidates for removal. The bigram vocabulary is "
-    "bounded by charset² (~1k rows) so the model joins back by "
-    "broadcast; bigram extraction is scan-side (tokenize-once transform), "
-    "leaving one real shuffle (per-doc sum). Ranking divides as double "
-    "ONLY in the sort key (both engines IEEE-divide identically; integer "
-    "columns carry the evidence), doc_id tiebreak.",
-    tags=("text", "quality", "curation"),
-)
-def char_bigram_fluency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    # Explode the bigram stream ONCE into per-doc term counts (map-side
-    # combined); the corpus model then derives from the counts (freq =
-    # Σ tf over docs) instead of a second pass over the raw stream, and
-    # per-doc totals become Σ tf / Σ tf·freq. Bigrams come from ONE
-    # codegen'd JVM regex per doc (overlapping via lookahead capture) —
-    # measured 3x faster than the interpreted
-    # transform(sequence, substring) lambda, identical output.
-    perdoc_bg = (
-        t["documents"]
-        .select(
-            "doc_id",
-            F.explode(F.expr(r"regexp_extract_all(text, '(?=(..))', 1)")).alias("bg"),
-        )
-        .groupBy("doc_id", "bg")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        # consumed twice (model fit + scoring join): persist the compact
-        # count frame, not the raw bigram stream
-        .persist()
-    )
-    vocab = perdoc_bg.groupBy("bg").agg(F.sum("tf").alias("freq"))
-    perdoc = (
-        perdoc_bg.join(F.broadcast(vocab), "bg")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("tf").alias("n_bigrams"),
-            F.sum(F.col("tf") * F.col("freq")).alias("freq_sum"),
-        )
-    )
-    return (
-        perdoc.orderBy(
-            (F.col("freq_sum").cast("double") / F.col("n_bigrams")).asc(),
-            F.col("doc_id").asc(),
-        )
-        .limit(_FLUENCY_BOTTOM_K)
-        .select("doc_id", "n_bigrams", "freq_sum")
-    )
-
-
-@register_extra(
+@register(
     "doc_containment_pairs_prefix",
     # Same semantics as doc_containment_pairs -> the SAME oracle; the
     # driver row proves the prefix-filtered plan returns identical results.
@@ -3054,55 +2062,6 @@ def doc_containment_pairs_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.containment_pairs_prefix(grams, threshold_pct=CONTAINMENT_PCT).orderBy(
         "id_a", "id_b"
     )
-
-
-_CHUNK_CORPUS_ORACLE = f"""
-    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-    spans AS (
-        SELECT doc_id, j.j AS chunk_idx,
-               array_to_string(toks[j.j * {D.CHUNK_W} + 1 : j.j * {D.CHUNK_W} + {D.CHUNK_W}], ' ') AS chunk,
-               len(toks[j.j * {D.CHUNK_W} + 1 : j.j * {D.CHUNK_W} + {D.CHUNK_W}]) AS n_toks
-        FROM toks,
-             UNNEST(generate_series(
-                 0, CAST(ceil(len(toks) / {D.CHUNK_W}.0) AS INT) - 1)) AS j(j)
-    ),
-    retained AS (
-        SELECT doc_id, chunk_idx, chunk, n_toks FROM (
-            SELECT doc_id, chunk_idx, chunk, n_toks,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY chunk ORDER BY doc_id, chunk_idx) AS rn
-            FROM spans
-        ) WHERE rn = 1
-    ),
-    rebuilt AS (
-        SELECT doc_id,
-               string_agg(chunk, ' ' ORDER BY chunk_idx) AS text,
-               CAST(SUM(n_toks) AS BIGINT) AS n_tokens_retained
-        FROM retained GROUP BY doc_id
-    )
-    SELECT d.doc_id,
-           COALESCE(r.text, '') AS text,
-           COALESCE(r.n_tokens_retained, 0) AS n_tokens_retained
-    FROM documents d LEFT JOIN rebuilt r ON r.doc_id = d.doc_id
-    ORDER BY d.doc_id
-    """
-
-
-@register_extra(
-    "token_chunk_dedup_corpus",
-    _CHUNK_CORPUS_ORACLE,
-    description="The write side of span dedup: each document rebuilt from "
-    "only its RETAINED spans in original order — the deduped corpus a "
-    "curation pipeline would persist (token_chunk_dedup is its audit "
-    "twin). Reassembly sorts the per-doc retained (chunk_idx, chunk) "
-    "structs inside the aggregate — bounded by doc length, no global "
-    "sort; fully-duplicate docs come back empty rather than vanishing so "
-    "row identity survives for downstream joins.",
-    tags=("dedup", "text", "curation"),
-)
-def token_chunk_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    return D.chunk_dedup_corpus(t["documents"]).orderBy("doc_id")
 
 
 def _fp_init_ctes(k: int) -> str:
@@ -3165,7 +2124,7 @@ _KMEANS_FP_ORACLE = f"""
     """
 
 
-@register_extra(
+@register(
     "kmeans_farthest_profile",
     _KMEANS_FP_ORACLE,
     description="k-means with deterministic farthest-point (Gonzalez "
@@ -3225,7 +2184,7 @@ def _budget_oracle() -> str:
     """
 
 
-@register_extra(
+@register(
     "token_budget_selection",
     _budget_oracle(),
     description="Data selection under a token budget (the 'train on the "
@@ -3295,7 +2254,7 @@ def _contrastive_oracle() -> str:
     """
 
 
-@register_extra(
+@register(
     "contrastive_training_pairs",
     _contrastive_oracle(),
     description="Training-pair construction for contrastive / embedding "
@@ -3313,7 +2272,7 @@ def contrastive_training_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.contrastive_pairs(t["embeddings"]).orderBy("probe_id", "role", "other_id")
 
 
-@register_extra(
+@register(
     "corpus_snapshot_diff",
     """
     WITH new_snap AS (SELECT doc_id, md5(text) AS h FROM documents),
@@ -3418,7 +2377,7 @@ _COLLOC_ORACLE = f"""
     """
 
 
-@register_extra(
+@register(
     "collocation_pairs",
     _COLLOC_ORACLE,
     description="Collocation / phrase mining (the AutoPhrase step 1): "
@@ -3533,7 +2492,7 @@ def _pagerank_oracle() -> str:
     """
 
 
-@register_extra(
+@register(
     "doc_pagerank",
     _pagerank_oracle(),
     description="Iterative graph centrality: 2-round PageRank over the "
@@ -3560,7 +2519,7 @@ def doc_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_extra(
+@register(
     "corpus_card",
     """
     SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -3601,53 +2560,6 @@ def corpus_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_extra(
-    "similarity_spectrum",
-    f"""
-    WITH {GRAMS_CTE},
-    sp_sizes AS (SELECT doc_id, COUNT(*) AS n FROM grams GROUP BY doc_id),
-    sp_pairs AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS common
-        FROM grams a JOIN grams b ON a.gram = b.gram AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT CAST((p.common * 10) // (sa.n + sb.n - p.common) AS BIGINT) AS jaccard_decile,
-           CAST(COUNT(*) AS BIGINT) AS n_pairs,
-           CAST(MIN(p.common) AS BIGINT) AS min_common,
-           CAST(MAX(p.common) AS BIGINT) AS max_common
-    FROM sp_pairs p
-    JOIN sp_sizes sa ON sa.doc_id = p.id_a
-    JOIN sp_sizes sb ON sb.doc_id = p.id_b
-    GROUP BY 1
-    ORDER BY jaccard_decile
-    """,
-    description="Corpus self-similarity spectrum: every sharing pair's "
-    "Jaccard bucketed into integer deciles (common·10 div union — floor "
-    "division, engine-exact) and counted — the duplication histogram "
-    "that tells a curation team where to SET the dedup threshold before "
-    "running it (mass near decile 0 = benign vocabulary overlap; a fat "
-    "tail at 5+ = real duplication). Same inverted-index join as the "
-    "Jaccard family feeding one tiny groupBy; at scale the "
-    "max_gram_freq hot-shingle guard applies unchanged.",
-    tags=("dedup", "audit", "curation"),
-)
-def similarity_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    grams = D.shingles(t["documents"]).persist()
-    counts = D.jaccard_counts(grams)
-    decile = F.expr("CAST((common * 10) DIV (n_a + n_b - common) AS BIGINT)")
-    return (
-        counts.select(decile.alias("jaccard_decile"), "common")
-        .groupBy("jaccard_decile")
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.min("common").alias("min_common"),
-            F.max("common").alias("max_common"),
-        )
-        .orderBy("jaccard_decile")
-    )
-
-
 _TFIDF_TOP_K = 3
 _TFIDF_SCALE = 1_000_000
 
@@ -3676,7 +2588,7 @@ _TFIDF_ORACLE = f"""
     """
 
 
-@register_extra(
+@register(
     "tfidf_top_terms",
     _TFIDF_ORACLE,
     description="Per-document keyword extraction: top-3 terms by integer "
@@ -3754,7 +2666,7 @@ _DRIFT_ORACLE = f"""
     """
 
 
-@register_extra(
+@register(
     "term_drift_report",
     _DRIFT_ORACLE,
     description="Distribution-shift audit between two corpus slices "
@@ -3803,7 +2715,7 @@ def term_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_extra(
+@register(
     "embedding_coverage_audit",
     """
     SELECT CAST(SUM(CASE WHEN d.doc_id IS NOT NULL AND e.vec_id IS NOT NULL
@@ -3848,7 +2760,7 @@ def embedding_coverage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_extra(
+@register(
     "deletion_cascade_audit",
     """
     WITH del AS (SELECT doc_id FROM documents WHERE doc_id % 97 = 0),
@@ -3903,7 +2815,7 @@ def deletion_cascade_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-@register_extra(
+@register(
     "normalized_dedup_gain",
     """
     WITH norm AS (
@@ -4016,7 +2928,7 @@ def _curation_funnel_oracle() -> str:
     """
 
 
-@register_extra(
+@register(
     "curation_funnel_report",
     _curation_funnel_oracle(),
     description="The END-TO-END curation pipeline as one chained plan — "
@@ -4126,7 +3038,7 @@ _TRIANGLE_ORACLE = f"""
 """
 
 
-@register_extra(
+@register(
     "graph_triangle_census",
     _TRIANGLE_ORACLE,
     description="Triangle census of the near-dup similarity graph (same "
@@ -4151,321 +3063,6 @@ def graph_triangle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("common") * 5 >= (F.col("n_a") + F.col("n_b") - F.col("common"))
     ).select("id_a", "id_b")
     return D.triangle_census(edges)
-
-
-_SN_WINDOW = 8
-
-_SN_ORACLE = f"""
-    WITH {GRAMS_CTE},
-    sn_rank AS (
-        SELECT doc_id,
-               ROW_NUMBER() OVER (ORDER BY lang, n_chars, doc_id) AS rn
-        FROM documents
-    ),
-    sn_cand AS (
-        SELECT LEAST(a.doc_id, b.doc_id) AS id_a,
-               GREATEST(a.doc_id, b.doc_id) AS id_b,
-               CAST(b.rn - a.rn AS BIGINT) AS rank_dist
-        FROM sn_rank a JOIN sn_rank b
-          ON b.rn > a.rn AND b.rn - a.rn <= {_SN_WINDOW}
-    ),
-    sn_sizes AS (SELECT doc_id, COUNT(*) AS n FROM grams GROUP BY doc_id),
-    sn_common AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS common
-        FROM grams a JOIN grams b ON a.gram = b.gram AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT c.id_a, c.id_b, c.rank_dist,
-           CAST(sa.n AS BIGINT) AS n_a, CAST(sb.n AS BIGINT) AS n_b,
-           CAST(m.common AS BIGINT) AS common
-    FROM sn_cand c
-    JOIN sn_common m ON m.id_a = c.id_a AND m.id_b = c.id_b
-    JOIN sn_sizes sa ON sa.doc_id = c.id_a
-    JOIN sn_sizes sb ON sb.doc_id = c.id_b
-    WHERE m.common * 5 >= (sa.n + sb.n - m.common)
-    ORDER BY c.id_a, c.id_b
-"""
-
-
-@register_extra(
-    "sorted_neighborhood_pairs",
-    _SN_ORACLE,
-    description="Sorted-neighborhood dedup blocking: documents sort "
-    "globally on a cheap blocking key (lang, n_chars, doc_id), every "
-    "pair within 8 ranks becomes a candidate — O(n*w) candidates vs "
-    "O(n^2) all-pairs, the classic entity-resolution alternative to LSH "
-    "banding when near-dups share coarse attributes rather than "
-    "shingles. Candidates verify against exact Jaccard >= 0.2. The "
-    "global rank never builds a global window (range partitions + "
-    "per-partition row_number + broadcast prefix offsets, the "
-    "customer_spend_deciles discipline) and the neighbor join is the "
-    "pairs_within_window band trick in rank space — each pair generated "
-    "exactly once. Returns matched pairs with rank distance and the "
-    "integer Jaccard evidence.",
-    tags=("dedup", "blocking", "join"),
-)
-def sorted_neighborhood_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    docs = t["documents"]
-    cands = D.sorted_neighborhood_candidates(
-        docs,
-        [F.asc("lang"), F.asc("n_chars"), F.asc("doc_id")],
-        window=_SN_WINDOW,
-    ).persist()
-    # Direct per-candidate verify (the containment_pairs_prefix lesson):
-    # candidates touch every doc ~2w times, so the doc-restricted
-    # jaccard_counts(pairs=...) form degenerates to the full gram
-    # self-join. Joining each candidate's id_a grams against id_b's
-    # posting list costs Σ_cand n_a — proportional to the O(n·w)
-    # candidate count, independent of gram co-occurrence blowup.
-    grams = D.shingles(docs).persist()
-    ga = grams.select(F.col("doc_id").alias("id_a"), "gram")
-    gb = grams.select(F.col("doc_id").alias("id_b"), "gram")
-    common = (
-        cands.select("id_a", "id_b")
-        .join(ga, "id_a")
-        .join(gb, ["id_b", "gram"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    sizes = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    counts = common.join(
-        sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a")), "id_a"
-    ).join(sizes.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b")), "id_b")
-    matched = counts.filter(
-        F.col("common") * 5 >= (F.col("n_a") + F.col("n_b") - F.col("common"))
-    )
-    return (
-        matched.join(cands, ["id_a", "id_b"])
-        .select("id_a", "id_b", "rank_dist", "n_a", "n_b", "common")
-        .orderBy("id_a", "id_b")
-    )
-
-
-_BITEXT_ORACLE = f"""
-    WITH {_quant_cte()},
-    bx_sides AS (
-        SELECT n.vec_id AS id, n.qvec, n.qnorm AS qn, d.lang
-        FROM n JOIN documents d ON d.doc_id = n.vec_id
-    ),
-    bx_sc AS (
-        SELECT a.id AS id_a, b.id AS id_b, a.qn AS a_qn, b.qn AS b_qn,
-               CAST(list_sum(list_transform(range(1, len(a.qvec) + 1),
-                    i -> a.qvec[i] * b.qvec[i])) AS BIGINT) AS dot_q
-        FROM (SELECT * FROM bx_sides WHERE lang = 'en') a
-        CROSS JOIN (SELECT * FROM bx_sides WHERE lang = 'de') b
-    ),
-    bx_cos AS (
-        SELECT *, dot_q / sqrt(CAST(a_qn * b_qn AS DOUBLE)) AS cosine FROM bx_sc
-    ),
-    bx_fwd AS (
-        SELECT *, ROW_NUMBER() OVER (
-            PARTITION BY id_a ORDER BY cosine DESC, id_b ASC) AS fr
-        FROM bx_cos
-    ),
-    bx_bwd AS (
-        SELECT *, ROW_NUMBER() OVER (
-            PARTITION BY id_b ORDER BY cosine DESC, id_a ASC) AS br
-        FROM bx_cos
-    ),
-    bx_f2 AS (SELECT id_a, dot_q AS f2_dot, b_qn AS f2_qn FROM bx_fwd WHERE fr = 2),
-    bx_b2 AS (SELECT id_b, dot_q AS b2_dot, a_qn AS b2_qn FROM bx_bwd WHERE br = 2),
-    bx_m AS (
-        SELECT f.id_a, f.id_b, f.dot_q, f.a_qn, f.b_qn,
-               f2.f2_dot, f2.f2_qn, b2.b2_dot, b2.b2_qn
-        FROM (SELECT id_a, id_b, dot_q, a_qn, b_qn FROM bx_fwd WHERE fr = 1) f
-        JOIN (SELECT id_a, id_b FROM bx_bwd WHERE br = 1) bk
-          ON bk.id_a = f.id_a AND bk.id_b = f.id_b
-        LEFT JOIN bx_f2 f2 ON f2.id_a = f.id_a
-        LEFT JOIN bx_b2 b2 ON b2.id_b = f.id_b
-    )
-    SELECT id_a, id_b, dot_q,
-           ((CASE WHEN f2_dot IS NULL OR f2_dot <= 0 THEN TRUE
-                  ELSE (dot_q * dot_q) // {S.MARGIN_SQ_SCALE} * f2_qn * {S.MARGIN_DEN**2}
-                       >= (f2_dot * f2_dot) // {S.MARGIN_SQ_SCALE} * b_qn * {S.MARGIN_NUM**2}
-             END)
-            AND (CASE WHEN b2_dot IS NULL OR b2_dot <= 0 THEN TRUE
-                      ELSE (dot_q * dot_q) // {S.MARGIN_SQ_SCALE} * b2_qn * {S.MARGIN_DEN**2}
-                           >= (b2_dot * b2_dot) // {S.MARGIN_SQ_SCALE} * a_qn * {S.MARGIN_NUM**2}
-                 END)
-            AND dot_q > 0) AS margin_ok
-    FROM bx_m ORDER BY id_a
-"""
-
-
-@register_extra(
-    "bitext_margin_pairs",
-    _BITEXT_ORACLE,
-    description="Bitext mining (CCMatrix/LASER rule) between the 'en' and "
-    "'de' document embeddings: a pair is emitted when each side is the "
-    "other's cosine-nearest cross-lingual neighbor (forward-backward "
-    "consistency), with margin_ok flagging pairs whose best/second-best "
-    "cosine ratio clears 11/10 on BOTH sides — the hub filter that "
-    "separates translations from dense near-ties. The margin test never "
-    "compares floats: cross-multiplied squared dots with a 10^6 floor-div "
-    "reduction keep every term int64 and engine-exact; NN ranking uses "
-    "the module-wide (cosine DESC, id ASC) order. The all-pairs scoring "
-    "here is the brute baseline — at corpus scale the GEMM-blocked or "
-    "IVF candidate paths in operators/similarity.py are the drop-in "
-    "replacements for the cross join, and the rank windows stay "
-    "per-probe-id (bounded groups, keyed shuffles).",
-    tags=("embeddings", "similarity", "curation"),
-)
-def bitext_margin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents", "embeddings"])
-    emb = S.with_quantized(t["embeddings"])
-    langd = t["documents"].select("doc_id", "lang")
-    sided = emb.join(langd, emb.vec_id == langd.doc_id).select(
-        F.col("vec_id").alias("id"), "qvec", "qnorm", "lang"
-    )
-    a = sided.filter(F.col("lang") == "en").select("id", "qvec", "qnorm")
-    b = sided.filter(F.col("lang") == "de").select("id", "qvec", "qnorm")
-    return S.margin_mutual_pairs(a, b).orderBy("id_a")
-
-
-#: Fixed boilerplate tail appended to every third document — the hot-gram
-#: skew (site chrome, license footers) that motivates the PPJoin prefix
-#: filter. ~20 tokens so it dominates short docs' shingle sets.
-BOILERPLATE_TAIL = (
-    "subscribe to our newsletter terms of service apply all rights reserved "
-    "cookie policy contact us privacy statement follow us on social media"
-)
-
-_BP_ORACLE = f"""
-    WITH bp_docs AS (
-        SELECT doc_id,
-               CASE WHEN doc_id % 3 = 0 THEN text || ' {BOILERPLATE_TAIL}'
-                    ELSE text END AS text
-        FROM documents
-    ),
-    bp_toks AS (SELECT doc_id, string_split(text, ' ') AS toks FROM bp_docs),
-    bp_grams AS (
-        SELECT DISTINCT doc_id,
-               array_to_string(toks[i.i:i.i + {D.SHINGLE_N - 1}], ' ') AS gram
-        FROM bp_toks,
-             UNNEST(generate_series(1, len(toks) - {D.SHINGLE_N - 1})) AS i(i)
-    ),
-    bp_sizes AS (SELECT doc_id, COUNT(*) AS n FROM bp_grams GROUP BY doc_id),
-    bp_common AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS common
-        FROM bp_grams a JOIN bp_grams b ON a.gram = b.gram AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT cm.id_a, cm.id_b, sa.n AS n_a, sb.n AS n_b, cm.common,
-           CAST(cm.common AS DOUBLE) / LEAST(sa.n, sb.n) AS containment
-    FROM bp_common cm
-    JOIN bp_sizes sa ON sa.doc_id = cm.id_a
-    JOIN bp_sizes sb ON sb.doc_id = cm.id_b
-    WHERE cm.common * 100 >= {CONTAINMENT_PCT} * LEAST(sa.n, sb.n)
-    ORDER BY cm.id_a, cm.id_b
-"""
-
-
-def boilerplate_docs(docs: DataFrame) -> DataFrame:
-    """documents with the fixed BOILERPLATE_TAIL on every third doc — the
-    deterministic boilerplate-skew corpus (no files, no RNG)."""
-    return docs.withColumn(
-        "text",
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.concat(F.col("text"), F.lit(" " + BOILERPLATE_TAIL)),
-        ).otherwise(F.col("text")),
-    )
-
-
-@register_extra(
-    "containment_pairs_boilerplate",
-    _BP_ORACLE,
-    description="The PPJoin prefix-filter containment operator ON ITS "
-    "MOTIVATING DISTRIBUTION: every third document carries a fixed "
-    "20-token boilerplate tail (site chrome / license footer skew), the "
-    "regime where the raw inverted-index join blows up on hot shingles "
-    "and the rare-gram prefix probe wins (13-26x candidate reduction "
-    "measured in SCALING.md). Results are exact by the prefix lemma — "
-    "this oracle is the brute-force formulation over the same injected "
-    "corpus. Registered so the bench tracks the prefix path's cost on "
-    "skewed data every round, not just in one-off studies.",
-    tags=("dedup", "containment", "skew"),
-)
-def containment_pairs_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    grams = D.shingles(boilerplate_docs(t["documents"])).persist()
-    return D.containment_pairs_prefix(grams, threshold_pct=CONTAINMENT_PCT).orderBy(
-        "id_a", "id_b"
-    )
-
-
-#: Per-language keep-rates (buckets of 100) for the deterministic
-#: hash-gate rebalancing sample: the dominant language is cut hardest.
-REBALANCE_RATES = {"en": 40, "es": 80, "zh": 80, "de": 100, "fr": 100}
-#: Salt so the sampling hash is independent of dataset_split_assignment's.
-REBALANCE_SALT = "rs:"
-
-
-def _rebalance_oracle() -> str:
-    nib = lambda i: f"(strpos('0123456789abcdef', substr(h, {i}, 1)) - 1)"  # noqa: E731
-    bucket = f"({nib(1)} * 4096 + {nib(2)} * 256 + {nib(3)} * 16 + {nib(4)}) % 100"
-    rate = " ".join(
-        f"WHEN lang = '{g}' THEN {r}" for g, r in sorted(REBALANCE_RATES.items())
-    )
-    return f"""
-    WITH rb AS (
-        SELECT doc_id, lang,
-               md5('{REBALANCE_SALT}' || CAST(doc_id AS VARCHAR)) AS h
-        FROM documents
-    ),
-    rbb AS (
-        SELECT doc_id, lang, {bucket} AS bucket,
-               CASE {rate} ELSE 0 END AS rate
-        FROM rb
-    )
-    SELECT doc_id, lang, CAST(bucket AS BIGINT) AS bucket
-    FROM rbb WHERE bucket < rate
-    ORDER BY doc_id
-    """
-
-
-@register_extra(
-    "lang_rebalanced_sample",
-    _rebalance_oracle(),
-    description="Deterministic hash-gate rebalancing sample: each doc "
-    "keeps iff its salted 16-bit md5 bucket (mod 100) falls under its "
-    "language's keep-rate — the stateless Bernoulli complement to "
-    "corpus_mixture_sample's quota-exact ranks. The trade is explicit: "
-    "quotas hit target counts exactly but cost a rank shuffle; the hash "
-    "gate is a pure scan-side projection (ZERO shuffle at any corpus "
-    "size), idempotent under reprocessing and replay (the same doc "
-    "always makes the same decision — what streaming and incremental "
-    "backfills need), at the cost of binomial jitter around the target "
-    "rate. Salted so sampling stays independent of the train/valid/test "
-    "bucket hash. Languages ABSENT from the rate table get rate 0 and "
-    "drop entirely (explicit allow-list semantics — mirrored by the "
-    "oracle's CASE ... ELSE 0); list a language with rate 100 to pass "
-    "it through.",
-    tags=("sampling", "curation"),
-)
-def lang_rebalanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    hx = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(REBALANCE_SALT), F.col("doc_id").cast("string"))),
-            1,
-            4,
-        ),
-        16,
-        10,
-    )
-    rate = F.lit(0)
-    for g, r in sorted(REBALANCE_RATES.items()):
-        rate = F.when(F.col("lang") == g, F.lit(r)).otherwise(rate)
-    return (
-        t["documents"]
-        .withColumn("bucket", (hx.cast("long") % 100))
-        .withColumn("__rate", rate)
-        .filter(F.col("bucket") < F.col("__rate"))
-        .select("doc_id", "lang", "bucket")
-        .orderBy("doc_id")
-    )
 
 
 _CTFIDF_TOP_K = 3
@@ -4502,7 +3099,7 @@ _CTFIDF_ORACLE = f"""
 """
 
 
-@register_extra(
+@register(
     "cluster_topic_terms",
     _CTFIDF_ORACLE,
     description="Cluster labeling via class-based TF-IDF (the BERTopic "
@@ -4593,7 +3190,7 @@ def _oov_oracle() -> str:
     """
 
 
-@register_extra(
+@register(
     "oov_rate_by_split",
     _oov_oracle(),
     description="Out-of-vocabulary audit across the md5-bucket "
@@ -4633,76 +3230,7 @@ def oov_rate_by_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_XSRC_ORACLE = f"""
-    WITH {GRAMS_CTE},
-    xs_sizes AS (SELECT doc_id, COUNT(*) AS n FROM grams GROUP BY doc_id),
-    xs_pairs AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS common
-        FROM grams a JOIN grams b ON a.gram = b.gram AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    ),
-    xs_qual AS (
-        SELECT p.id_a, p.id_b, p.common FROM xs_pairs p
-        JOIN xs_sizes sa ON sa.doc_id = p.id_a
-        JOIN xs_sizes sb ON sb.doc_id = p.id_b
-        WHERE p.common * 5 >= (sa.n + sb.n - p.common)
-    )
-    SELECT LEAST(da.source, db.source) AS source_a,
-           GREATEST(da.source, db.source) AS source_b,
-           CAST(COUNT(*) AS BIGINT) AS n_pairs,
-           CAST(SUM(q.common) AS BIGINT) AS sum_common
-    FROM xs_qual q
-    JOIN documents da ON da.doc_id = q.id_a
-    JOIN documents db ON db.doc_id = q.id_b
-    GROUP BY 1, 2
-    ORDER BY source_a, source_b
-"""
-
-
-@register_extra(
-    "cross_source_dup_matrix",
-    _XSRC_ORACLE,
-    description="Mirror-site detection: the near-dup pair set (Jaccard "
-    ">= 0.2, the shared inverted-index edge build) rolled up into a "
-    "source x source matrix (canonical least/greatest ordering) with "
-    "pair counts and total shared-shingle mass — the provenance audit "
-    "that tells a curation team WHICH feeds copy from each other, so "
-    "dedup policy (which source survives) can be set per source pair "
-    "rather than per document. The rollup adds one tiny keyed aggregate "
-    "on top of the pair stream; the doc->source attachments are "
-    "id-keyed joins that co-partition with the pair keys.",
-    tags=("dedup", "audit", "curation"),
-)
-def cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    docs = t["documents"]
-    grams = D.shingles(docs).persist()
-    qual = D.jaccard_counts(grams).filter(
-        F.col("common") * 5 >= (F.col("n_a") + F.col("n_b") - F.col("common"))
-    )
-    src = docs.select("doc_id", "source")
-    return (
-        qual.join(
-            src.select(F.col("doc_id").alias("id_a"), F.col("source").alias("sa")),
-            "id_a",
-        )
-        .join(
-            src.select(F.col("doc_id").alias("id_b"), F.col("source").alias("sb")),
-            "id_b",
-        )
-        .groupBy(
-            F.least("sa", "sb").alias("source_a"),
-            F.greatest("sa", "sb").alias("source_b"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.sum("common").alias("sum_common"),
-        )
-        .orderBy("source_a", "source_b")
-    )
-
-
-@register_extra(
+@register(
     "exif_orientation_probe",
     """
     SELECT doc_id AS media_id,
@@ -4767,7 +3295,7 @@ _LSH_RECALL_ORACLE = f"""
 """
 
 
-@register_extra(
+@register(
     "lsh_dedup_recall",
     _LSH_RECALL_ORACLE,
     description="LSH banding quality audit: every TRUE near-dup pair "
@@ -4898,7 +3426,7 @@ def _bitext_ivf_oracle(sf_dir: str = "/root/testdata/sf0.01") -> str | None:
     """
 
 
-@register_extra(
+@register(
     "bitext_margin_pairs_ivf",
     _bitext_ivf_oracle(),
     description="bitext_margin_pairs through the IVF coarse quantizer — "
@@ -5018,7 +3546,7 @@ def _maxsim_oracle() -> str:
     """
 
 
-@register_extra(
+@register(
     "late_interaction_topk",
     _maxsim_oracle(),
     description="Late-interaction retrieval (ColBERT MaxSim): score(q, d) "
@@ -5123,7 +3651,7 @@ _RAG_ORACLE = f"""
 """
 
 
-@register_extra(
+@register(
     "rag_chunk_spans",
     _RAG_ORACLE,
     description="RAG document chunking: overlapping token windows of "
@@ -5223,7 +3751,7 @@ def _graph_profile_oracle() -> str:
     """
 
 
-@register_extra(
+@register(
     "dedup_graph_profile",
     _graph_profile_oracle(),
     description="The graph composition lever made real: connected "
@@ -5448,63 +3976,6 @@ def decayed_revenue_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: lands in the same or adjacent T-wide length buckets.
 EDIT_DIST_MAX = 25
 
-#: Deterministic salt fan-out for the length-bucket join. Length buckets are
-#: few (max_doc_len / T of them) and docs concentrate in a handful, so a
-#: plain bucket-keyed join runs ONE task per bucket regardless of cluster
-#: size. Salting the left side by doc_id % S and replicating the right
-#: side's probe rows S ways raises the join parallelism to buckets x S with
-#: identical results — the standard replicate-the-build-side skew treatment,
-#: here applied deterministically so the plan is replay-stable.
-EDIT_DIST_SALT = 8
-
-
-@register(
-    "edit_distance_near_pairs",
-    f"""
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           CAST(levenshtein(a.text, b.text) AS BIGINT) AS edit_distance
-    FROM documents a
-    JOIN documents b
-      ON a.doc_id < b.doc_id
-     AND abs(a.n_chars - b.n_chars) <= {EDIT_DIST_MAX}
-     AND levenshtein(a.text, b.text) <= {EDIT_DIST_MAX}
-    ORDER BY doc_a, doc_b
-    """,
-    description="Character-level near-duplicate pairs: all doc pairs within "
-    f"levenshtein distance {EDIT_DIST_MAX} — the byte-precise complement "
-    "to the token-level MinHash/SimHash/Jaccard family (catches small "
-    "in-place edits those can over- or under-count). The oracle is the "
-    "brute-force quadratic SEMANTICS; the Spark plan is the scale form: "
-    "length-bucket blocking (bucket width = the threshold) joins each doc "
-    "only against its own and one adjacent bucket — exact by the "
-    "levenshtein >= |len difference| lower bound — then verifies "
-    "candidates with the THRESHOLDED builtin levenshtein (early-exits "
-    "the DP once the band exceeds T; JVM-side, no UDF). Candidate volume "
-    "is sum over buckets of |b_i| * (|b_i| + |b_i+1|) ~ N * density "
-    "rather than N^2; the correctness gate doubles as the blocking "
-    "exactness proof. Pair emitted once: same-bucket pairs keep id_a < "
-    "id_b, cross-bucket pairs join only (bucket, bucket+1), re-ordered "
-    "by id on output. An Ed-Join prefix-filter variant (method='grams') "
-    "is the registered scale path for vocab-diverse corpora, where rare "
-    "q-grams discriminate; on THIS corpus's small shared vocabulary "
-    "every content filter measured vacuous (distinct-gram count kept "
-    "99.8% of candidates, PassJoin positional blocks passed 37%), so "
-    "near-length candidates + fast thresholded DP IS the optimum. "
-    "ENVELOPE (r8): this exact form is the ORACLE/AUDIT surface — "
-    "within a length bucket it is inherently quadratic (measured 70x "
-    "wall for 10x docs on the small-vocab corpus, SCALING.md), so its "
-    "registered role is bounded corpora and recall audits; the "
-    "corpus-scale default is edit_distance_near_pairs_lsh (banded "
-    "candidates + identical verify, 43.9s at K=100/500k docs), now "
-    "carrying its own driver row.",
-    tags=("dedup", "join", "text"),
-)
-def edit_distance_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    return D.edit_distance_pairs(
-        t["documents"], EDIT_DIST_MAX, salt=EDIT_DIST_SALT
-    ).orderBy("doc_a", "doc_b")
-
 
 @register(
     "edit_distance_near_pairs_lsh",
@@ -5656,12 +4127,8 @@ def jsonl_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# STAGED operators (registry at its 150 cap — registration deferred to a
-# rotation round with a free window slot / cap replacement, exactly like
-# analytics.streamed_customer_features). Both are training-batch
-# construction audits: the step between curation (dedup / mixture /
-# packing, all registered) and the training loop itself. Local-oracle
-# proven by tests/test_batching_staged.py at sf0.01.
+# Training-batch construction audits: the step between curation (dedup /
+# mixture / packing) and the training loop itself.
 # ---------------------------------------------------------------------------
 
 #: Batch count for the padding audit. Production fixes the batch SIZE and
@@ -5753,7 +4220,7 @@ def padding_waste(base: DataFrame, sort_cols: list, n_batches: int) -> DataFrame
     return retaining(agg, *retained_caches(nt))
 
 
-@register_extra(
+@register(
     "length_bucket_padding_stats",
     LENGTH_BUCKET_PADDING_ORACLE,
     description="Training-batch padding audit: pad-token waste of "
@@ -5884,7 +4351,7 @@ CORPUS_SHUFFLE_ORACLE = f"""
 """
 
 
-@register_extra(
+@register(
     "corpus_shuffle_batches",
     CORPUS_SHUFFLE_ORACLE,
     description="Deterministic training-order shuffle (md5(doc_id||salt) "
@@ -6012,7 +4479,7 @@ TOKENIZER_FERTILITY_ORACLE = f"""
 """
 
 
-@register_extra(
+@register(
     "tokenizer_fertility_by_lang",
     TOKENIZER_FERTILITY_ORACLE,
     description="Tokenizer fertility audit by language: regex-tokens per "
@@ -6102,7 +4569,7 @@ QUALITY_LENGTH_DECILE_ORACLE = """
 """
 
 
-@register_extra(
+@register(
     "quality_by_length_decile",
     QUALITY_LENGTH_DECILE_ORACLE,
     description="Length-bias calibration of the lexical-diversity quality "
@@ -6177,7 +4644,7 @@ WEBP_DIMS_ORACLE = """
 """
 
 
-@register_extra(
+@register(
     "webp_dims_probe",
     WEBP_DIMS_ORACLE,
     description="WebP header-walk dims probe: one Arrow-batched "
@@ -6212,7 +4679,7 @@ OGG_META_ORACLE = """
 """
 
 
-@register_extra(
+@register(
     "ogg_meta_probe",
     OGG_META_ORACLE,
     description="OGG container probe: Opus/Vorbis identification "
@@ -6250,7 +4717,7 @@ WARC_RECORD_ORACLE = """
 """
 
 
-@register_extra(
+@register(
     "warc_record_stats",
     WARC_RECORD_ORACLE,
     description="WARC crawl-shard record parsing — framing walk (version "
@@ -6311,7 +4778,7 @@ WARC_TEXT_ORACLE = """
 """
 
 
-@register_extra(
+@register(
     "warc_text_corpus",
     WARC_TEXT_ORACLE,
     description="Crawl -> corpus extraction end to end: WARC shards -> "
@@ -6352,7 +4819,7 @@ AVIF_DIMS_ORACLE = """
 """
 
 
-@register_extra(
+@register(
     "avif_dims_probe",
     AVIF_DIMS_ORACLE,
     description="AVIF/HEIC dims probe via the shared ISO-BMFF box "
@@ -6413,7 +4880,7 @@ ZORDER_PRUNING_ORACLE = """
 """
 
 
-@register_extra(
+@register(
     "zorder_pruning_stats",
     ZORDER_PRUNING_ORACLE,
     description="Z-order layout pruning proof: write a two-axis table "
@@ -6546,7 +5013,7 @@ def _dsir_oracle() -> str | None:
 DSIR_SELECTED_ORACLE = _dsir_oracle()
 
 
-@register_extra(
+@register(
     "dsir_selected_docs",
     DSIR_SELECTED_ORACLE,
     description="DSIR data selection (Xie et al. 2023): hashed "
@@ -6659,7 +5126,7 @@ GOPHER_QUALITY_ORACLE = f"""
 """
 
 
-@register_extra(
+@register(
     "gopher_quality_report",
     GOPHER_QUALITY_ORACLE,
     description="Gopher quality-rule battery (Rae et al. 2021 A1.1): "
@@ -6762,7 +5229,7 @@ def _bpe_train_oracle() -> str:
 BPE_TRAIN_ORACLE = _bpe_train_oracle()
 
 
-@register_extra(
+@register(
     "bpe_train_merges_report",
     BPE_TRAIN_ORACLE,
     description="BPE tokenizer training loop (Sennrich et al. 2016): per "
@@ -6850,7 +5317,7 @@ CDC_CHUNK_ORACLE = f"""
 """
 
 
-@register_extra(
+@register(
     "cdc_chunk_dedup",
     CDC_CHUNK_ORACLE,
     description="Content-defined chunk dedup: Rabin-style rolling-hash "
@@ -6938,7 +5405,7 @@ def _bpe_encode_oracle() -> str:
 BPE_ENCODE_ORACLE = _bpe_encode_oracle()
 
 
-@register_extra(
+@register(
     "bpe_encode_report",
     BPE_ENCODE_ORACLE,
     description="Tokenizer lifecycle end-to-end: train BPE_MERGE_ROUNDS "
@@ -7014,7 +5481,7 @@ URL_CANONICAL_ORACLE = """
 """
 
 
-@register_extra(
+@register(
     "url_canonical_dedup",
     URL_CANONICAL_ORACLE,
     description="URL canonicalization — the crawl-dedup step before "
@@ -7089,7 +5556,7 @@ CRAWL_HOST_ORACLE = """
 """
 
 
-@register_extra(
+@register(
     "crawl_host_report",
     CRAWL_HOST_ORACLE,
     description="Crawl observability rollup: WARC shards -> extracted "
@@ -7158,7 +5625,7 @@ CRAWL_DEDUP_ORACLE = f"""
 """
 
 
-@register_extra(
+@register(
     "crawl_exact_dedup_stats",
     CRAWL_DEDUP_ORACLE,
     description="Crawl-level exact dedup end to end over constructed "
@@ -7232,7 +5699,7 @@ SITEMAP_ORACLE = """
 """
 
 
-@register_extra(
+@register(
     "sitemap_url_inventory",
     SITEMAP_ORACLE,
     description="Crawl-frontier sitemap ingestion: <urlset> XML parsed "
@@ -7312,7 +5779,7 @@ SITEMAP_INDEX_ORACLE = f"""
 """
 
 
-@register_extra(
+@register(
     "sitemap_index_inventory",
     SITEMAP_INDEX_ORACLE,
     description="Two-level sitemap walk: <sitemapindex> children joined "
@@ -7420,7 +5887,7 @@ HOST_BOILERPLATE_ORACLE = """
 """
 
 
-@register_extra(
+@register(
     "host_boilerplate_strip_stats",
     HOST_BOILERPLATE_ORACLE,
     description="CCNet/Onion-style host-scoped boilerplate stripping: "
@@ -7487,7 +5954,7 @@ ROBOTS_AUDIT_ORACLE = """
 """
 
 
-@register_extra(
+@register(
     "crawl_robots_audit",
     ROBOTS_AUDIT_ORACLE,
     description="robots.txt fetch governance end to end: per-host rule "
@@ -7552,9 +6019,8 @@ def crawl_robots_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# STAGED r11 additions: the Gopher REPETITION battery and ExactSubstr-style
-# duplicated-span extraction (registration queues behind the r12 tranche —
-# COVERAGE.md staged table is canonical).
+# The Gopher REPETITION battery and ExactSubstr-style duplicated-span
+# extraction.
 # ---------------------------------------------------------------------------
 
 
@@ -7713,7 +6179,7 @@ def _gopher_repetition_oracle() -> str:
 GOPHER_REPETITION_ORACLE = _gopher_repetition_oracle()
 
 
-@register_extra(
+@register(
     "gopher_repetition_report",
     GOPHER_REPETITION_ORACLE,
     description="Gopher repetition-removal battery (Rae et al. 2021 "
@@ -7809,7 +6275,7 @@ def _dup_span_oracle() -> str:
 DUP_SPAN_ORACLE = _dup_span_oracle()
 
 
-@register_extra(
+@register(
     "duplicated_span_report",
     DUP_SPAN_ORACLE,
     description="ExactSubstr-style duplicated spans (Lee et al. 2022): "
@@ -7895,7 +6361,7 @@ def _c4_oracle() -> str:
 C4_CLEAN_ORACLE = _c4_oracle()
 
 
-@register_extra(
+@register(
     "c4_clean_report",
     C4_CLEAN_ORACLE,
     description="C4 cleanup battery (Raffel et al. 2020 section 2.2): "
@@ -7929,10 +6395,8 @@ def c4_clean_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# STAGED r13+ tranche: quality-aware dedup retention, the Kneser-Ney
-# bigram table, and the token-budget shard manifest. Registration follows
-# the COVERAGE.md §rotation cap policy; full local proof lives in
-# tests/test_staged_r13.py.
+# Quality-aware dedup retention, the Kneser-Ney bigram table, and the
+# token-budget shard manifest.
 # ---------------------------------------------------------------------------
 
 
@@ -8000,7 +6464,7 @@ def _quality_retained_oracle() -> str:
 DEDUP_QUALITY_RETAINED_ORACLE = _quality_retained_oracle()
 
 
-@register_extra(
+@register(
     "dedup_retained_by_quality",
     DEDUP_QUALITY_RETAINED_ORACLE,
     description="Quality-aware near-dup survivor selection (RefinedWeb/"
@@ -8119,7 +6583,7 @@ def _kn_bigram_oracle() -> str:
 KN_BIGRAM_ORACLE = _kn_bigram_oracle()
 
 
-@register_extra(
+@register(
     "ngram_lm_report",
     KN_BIGRAM_ORACLE,
     description="Kneser-Ney bigram table (the KenLM count pass CCNet-"
@@ -8211,7 +6675,7 @@ def _shard_manifest_oracle() -> str:
 SHARD_MANIFEST_ORACLE = _shard_manifest_oracle()
 
 
-@register_extra(
+@register(
     "training_shard_manifest",
     SHARD_MANIFEST_ORACLE,
     description="Training-export shard manifest: deterministic token-"
@@ -8353,7 +6817,7 @@ def _perceptron_oracle() -> str:
 QUALITY_CLASSIFIER_ORACLE = _perceptron_oracle()
 
 
-@register_extra(
+@register(
     "quality_classifier_report",
     QUALITY_CLASSIFIER_ORACLE,
     description="Deterministic batch-perceptron quality classifier over "
@@ -8522,7 +6986,7 @@ def _unigram_oracle(
 UNIGRAM_LM_ORACLE = _unigram_oracle()
 
 
-@register_extra(
+@register(
     "unigram_lm_report",
     UNIGRAM_LM_ORACLE,
     description="Unigram-LM tokenizer trainer (Kudo 2018): seed word "
@@ -8570,11 +7034,8 @@ def unigram_lm_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# r15 tranche (ROADMAP "r15 schedule", drafted r13, REGISTERED r15): the
-# first staged-from-scratch tranche after the pre-pinned queue emptied at
-# r14. Each registration swaps against its drafted r12-cohort victim via
-# _UNREGISTER[15] (plans/__init__.py); twin pins in
-# tests/test_r15_twin_equivalence.py predate the round.
+# r15 tranche: KN perplexity, MinHash estimate error, temperature
+# mixture, Bloom prefilter, join-key skew and deterministic HLL.
 # ---------------------------------------------------------------------------
 
 
@@ -8655,7 +7116,7 @@ def _kn_doc_perplexity_oracle() -> str:
 KN_DOC_PERPLEXITY_ORACLE = _kn_doc_perplexity_oracle()
 
 
-@register_extra(
+@register(
     "doc_perplexity_report",
     KN_DOC_PERPLEXITY_ORACLE,
     description="CCNet perplexity filter: KN bigram LM scores every "
@@ -8738,7 +7199,7 @@ MINHASH_ESTIMATE_ORACLE = f"""
 """
 
 
-@register_extra(
+@register(
     "minhash_estimate_error",
     MINHASH_ESTIMATE_ORACLE,
     description="MinHash precision audit: every banded candidate pair "
@@ -8801,7 +7262,7 @@ def _temperature_oracle() -> str:
 TEMPERATURE_MIXTURE_ORACLE = _temperature_oracle()
 
 
-@register_extra(
+@register(
     "temperature_mixture_report",
     TEMPERATURE_MIXTURE_ORACLE,
     description="Temperature-sampling mixture config (tau=2, integer-"
@@ -8903,7 +7364,7 @@ def _bloom_oracle() -> str:
 BLOOM_PREFILTER_ORACLE = _bloom_oracle()
 
 
-@register_extra(
+@register(
     "bloom_prefilter_stats",
     BLOOM_PREFILTER_ORACLE,
     description="Bloom membership prefilter census: 32x32-bit-word "
@@ -8959,7 +7420,7 @@ def _key_skew_oracle() -> str:
 KEY_SKEW_ORACLE = _key_skew_oracle()
 
 
-@register_extra(
+@register(
     "join_key_skew_report",
     KEY_SKEW_ORACLE,
     description="Shuffle-planning skew census per fact join-key family: "
@@ -9090,7 +7551,7 @@ HLL_DISTINCT_ORACLE = " UNION ALL ".join(
 ) + " ORDER BY metric"
 
 
-@register_extra(
+@register(
     "hll_distinct_report",
     HLL_DISTINCT_ORACLE,
     description="Deterministic integer-exact HyperLogLog vs exact "
@@ -9101,9 +7562,10 @@ HLL_DISTINCT_ORACLE = " UNION ALL ".join(
 )
 def hll_distinct_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic HyperLogLog distinct estimation — the
-    sketch family RE-ENTERS the driver proof regime. approx_sketch_stats
-    is RETIRED because Spark's HLL++ register layout is engine-private
-    (no ANSI oracle can recompute it); this operator builds HLL from
+    sketch family RE-ENTERS the driver proof regime. Spark's HLL++
+    (approx_count_distinct) cannot be hash-gated because its register
+    layout is engine-private (no ANSI oracle can recompute it); this
+    operator builds HLL from
     scratch on the shared md5 hash family with every step integer-exact
     (generated threshold ladder for the leading-zero count, clamped
     registers bounding all arithmetic inside int64, remainder-corrected
@@ -9276,7 +7738,7 @@ HLL_OVERLAP_ORACLE = " UNION ALL ".join(
 ) + " ORDER BY metric"
 
 
-@register_extra(
+@register(
     "hll_overlap_report",
     HLL_OVERLAP_ORACLE,
     description="Sketch-algebra overlap audit: per-bucket-MAX register "
@@ -9366,11 +7828,8 @@ def hll_overlap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# STAGED r16 tranche (ROADMAP "r16 schedule", drafted r14): five new ops
-# + the r13-staged hll_overlap_report complete the six swaps against the
-# r13 cohort. Registration happens at the r16 rotation; until then these
-# carry the full local proof battery (tests/test_staged_r16.py) like
-# every staged predecessor.
+# r16 curation censuses: badwords filter, n-gram diversity, template
+# affixes, corpus snapshot delta and language-ID confusion.
 # ---------------------------------------------------------------------------
 
 
@@ -9419,7 +7878,7 @@ BADWORDS_FILTER_ORACLE = f"""
 """
 
 
-@register_extra(
+@register(
     "badwords_filter_report",
     BADWORDS_FILTER_ORACLE,
     description="C4 bad-words document gate: per-language block census "
@@ -9523,7 +7982,7 @@ def _ngram_diversity_oracle() -> str:
 NGRAM_DIVERSITY_ORACLE = _ngram_diversity_oracle()
 
 
-@register_extra(
+@register(
     "ngram_diversity_report",
     NGRAM_DIVERSITY_ORACLE,
     description="Corpus-level n-gram diversity census per source: "
@@ -9636,7 +8095,7 @@ TEMPLATE_AFFIX_ORACLE = f"""
 """
 
 
-@register_extra(
+@register(
     "template_affix_report",
     TEMPLATE_AFFIX_ORACLE,
     description="Head/tail template-family census: docs sharing their "
@@ -9738,7 +8197,7 @@ CORPUS_DELTA_ORACLE = """
 """
 
 
-@register_extra(
+@register(
     "corpus_snapshot_delta",
     CORPUS_DELTA_ORACLE,
     description="Epoch-over-epoch corpus diff: FULL OUTER id join of two "
@@ -9814,7 +8273,7 @@ LANGID_CONFUSION_ORACLE = f"""
 """
 
 
-@register_extra(
+@register(
     "langid_confusion_report",
     LANGID_CONFUSION_ORACLE,
     description="Language-ID confusion census: (true, predicted) doc "
@@ -10102,428 +8561,6 @@ def _hash_sample_frame(li: DataFrame, sample: DataFrame) -> DataFrame:
             "q90_exact",
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# STAGED r17 tranche (built r15, completing the seeds to the ~6/round
-# rate): the streamed-sketch registry entry (stream==batch sketch algebra
-# under the hash gate), the quality-gate agreement census (Cohen's kappa
-# between the registered C4 and Gopher batteries), and the two
-# rank-spectrum audits over the word census (Zipf fit, vocab coverage)
-# sharing the factored _distributed_rank kernel. Pairing decided at
-# r16/r17 open against the then-current ADVICE; until then these carry
-# the full local battery (tests/test_staged_r17.py).
-# ---------------------------------------------------------------------------
-
-
-def _streamed_hll_oracle() -> str:
-    """Oracle for :func:`streamed_hll_snapshot_report`: the from-scratch
-    batch HLL re-derivation (the SAME shared block hll_distinct_report
-    uses for this target — stream==batch is exactly the claim), plus the
-    per-wave distinct-bucket recount proving the delta table really is
-    per-batch partials (wave = event_id parity, the staging split)."""
-    block = _hll_metric_oracle("events.user_id", "events", "user_id")
-    return f"""
-    SELECT o.*, w.n_delta_rows FROM ({block}) o CROSS JOIN (
-        SELECT CAST(SUM(nb) AS BIGINT) AS n_delta_rows FROM (
-            SELECT event_id % 2 AS wave,
-                   COUNT(DISTINCT CAST(('0x' || substr(
-                       md5(CAST(user_id AS VARCHAR)), 1, 2)) AS BIGINT)) AS nb
-            FROM events WHERE user_id IS NOT NULL
-            GROUP BY event_id % 2
-        )
-    ) w
-    """
-
-
-STREAMED_HLL_SNAPSHOT_ORACLE = _streamed_hll_oracle()
-
-
-def streamed_hll_snapshot_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED r17: incremental sketch maintenance under the driver hash
-    gate — the fourth streaming guarantee in the window (after dedup
-    state, windowed completeness, and partial-aggregate reassembly):
-    SKETCH-ALGEBRA reassembly. Events arrive in two disjoint waves
-    (event_id parity, staged as separate files, maxFilesPerTrigger=1 →
-    separate micro-batches); each batch sketches ONLY its own rows into
-    a ≤256-row register partition (streaming/streams.py::
-    hll_register_stream); the snapshot's per-bucket MAX fold must equal
-    the one-shot batch sketch BIT-IDENTICALLY (MAX-merge is the sketch
-    algebra), so the estimate hash-matches the from-scratch SQL
-    re-derivation — the same shared oracle block as hll_distinct_report.
-    n_delta_rows additionally pins that the delta table is genuinely
-    per-batch partials (sum of per-wave distinct buckets), not a
-    one-shot sketch. 100 TB shape: the stream pays one scan per batch
-    at arrival; every later cardinality read is a ≤(batches×256)-row
-    fold — never a corpus rescan."""
-    import shutil
-    import tempfile
-
-    from retail_aws_etl_pipeline_spark.operators import sketch as SK
-    from retail_aws_etl_pipeline_spark.streaming.streams import (
-        hll_register_stream,
-        read_hll_snapshot,
-    )
-
-    events = load_tables(spark, sf_dir, ["events"])["events"]
-    keyed = events.select("event_id", "user_id")
-    staging = tempfile.mkdtemp(prefix="streamed_hll_src_")
-    delta = tempfile.mkdtemp(prefix="streamed_hll_delta_")
-    ckpt = tempfile.mkdtemp(prefix="streamed_hll_ckpt_")
-    try:
-        for i in range(2):  # disjoint waves -> separate micro-batches
-            (
-                keyed.filter(
-                    F.pmod(F.coalesce(F.col("event_id"), F.lit(0)), F.lit(2)) == i
-                )
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(staging)
-            )
-        stream = (
-            spark.readStream.schema(keyed.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staging)
-        )
-        q = hll_register_stream(stream, "user_id", delta_dir=delta, checkpoint_dir=ckpt)
-        q.awaitTermination()
-        # bounded driver scalar: the delta table is ≤ batches × 256 rows
-        n_delta = spark.read.parquet(delta).count()
-        snap = read_hll_snapshot(spark, delta).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(delta, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    est = SK.hll_estimate(snap)
-    exact = events.filter(F.col("user_id").isNotNull()).agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.count_distinct(F.col("user_id")).cast("long").alias("exact_distinct"),
-    )
-    return exact.crossJoin(F.broadcast(est)).select(
-        F.lit("events.user_id").alias("metric"),
-        "n_rows",
-        "exact_distinct",
-        "hll_estimate",
-        F.expr(
-            "abs(hll_estimate - exact_distinct) * 1000000L"
-            " div greatest(exact_distinct, 1L)"
-        ).alias("err_ppm"),
-        "v_zero_registers",
-        "rc_max_register",
-        F.lit(n_delta).cast("long").alias("n_delta_rows"),
-    )
-
-
-#: Oracle for :func:`quality_gate_agreement_report`. Both gates come from
-#: the SAME shared fragments their registered oracles are built from
-#: (_gopher_m_cte/_GOPHER_PASS_SQL, _c4_page_cte/_C4_PAGE_KEPT_SQL), so
-#: the agreement census can never drift from the gate definitions.
-QUALITY_GATE_AGREEMENT_ORACLE = f"""
-    WITH {_gopher_m_cte("qa_gb", "qa_gm")},
-    qa_g AS (SELECT doc_id, {_GOPHER_PASS_SQL} AS g FROM qa_gm),
-    {_c4_page_cte("qa_cb", "qa_cc")},
-    qa_c AS (SELECT doc_id, {_C4_PAGE_KEPT_SQL} AS c FROM qa_cc),
-    qa_j AS (
-        SELECT d.source, g.g, c.c
-        FROM documents d
-        JOIN qa_g g ON g.doc_id = d.doc_id
-        JOIN qa_c c ON c.doc_id = d.doc_id
-        WHERE d.source IS NOT NULL
-    ),
-    qa_s AS (
-        SELECT source,
-               CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(CASE WHEN g AND c THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_both_keep,
-               CAST(SUM(CASE WHEN NOT g AND NOT c THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_both_drop,
-               CAST(SUM(CASE WHEN g AND NOT c THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_gopher_only,
-               CAST(SUM(CASE WHEN NOT g AND c THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_c4_only
-        FROM qa_j GROUP BY source
-    ),
-    qa_p AS (
-        SELECT *,
-               (n_both_keep + n_both_drop) * 1000000 // n_docs AS po_ppm,
-               ((n_both_keep + n_gopher_only) * (n_both_keep + n_c4_only)
-                + (n_both_drop + n_c4_only) * (n_both_drop + n_gopher_only))
-                   * 1000000 // (n_docs * n_docs) AS pe_ppm
-        FROM qa_s
-    )
-    SELECT source, n_docs, n_both_keep, n_both_drop, n_gopher_only, n_c4_only,
-           CAST(po_ppm AS BIGINT) AS po_ppm,
-           CAST(pe_ppm AS BIGINT) AS pe_ppm,
-           CAST((po_ppm - pe_ppm) * 1000000
-                // GREATEST(1000000 - pe_ppm, 1) AS BIGINT) AS kappa_ppm
-    FROM qa_p ORDER BY source
-"""
-
-
-def quality_gate_agreement_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED r17: inter-gate agreement census — Cohen's kappa (in ppm)
-    between the two registered document gates (C4 page_kept, Gopher
-    gopher_pass), per source. Running several quality gates and
-    reconciling them is standard curation practice (Dolma, FineWeb ship
-    multiple filter verdicts per doc); the kappa census is the QA view
-    that says whether two gates agree beyond chance — a gate pair with
-    near-zero kappa is measuring different things and their intersection
-    needs review before it gates 100 TB. Every quantity is integer
-    (observed/chance agreement in ppm, kappa via single-floor divisions;
-    both engines truncate integer division toward zero, verified r15,
-    so the possibly-negative kappa numerator is portable). Envelope:
-    pe's n² term needs n_docs < 3.0e9 per source — shard the census by
-    epoch above that. Scale shape: BOTH gate batteries are scan-side
-    projections computed in ONE chained pass (no join between gates),
-    then a single groupBy(source) whose output is |sources| rows. NULL
-    source is excluded (the manifest discipline)."""
-    t = load_tables(spark, sf_dir, ["documents"])
-    docs = t["documents"].filter(F.col("source").isNotNull())
-    flagged = TX.c4_clean_flags(TX.gopher_quality_flags(docs))
-    g, c = F.col("gopher_pass"), F.col("page_kept")
-    s = flagged.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum((g & c).cast("long")).cast("long").alias("n_both_keep"),
-        F.sum(((~g) & (~c)).cast("long")).cast("long").alias("n_both_drop"),
-        F.sum((g & (~c)).cast("long")).cast("long").alias("n_gopher_only"),
-        F.sum(((~g) & c).cast("long")).cast("long").alias("n_c4_only"),
-    )
-    p = s.withColumn(
-        "po_ppm",
-        F.expr("(n_both_keep + n_both_drop) * 1000000L div n_docs"),
-    ).withColumn(
-        "pe_ppm",
-        F.expr(
-            "((n_both_keep + n_gopher_only) * (n_both_keep + n_c4_only)"
-            " + (n_both_drop + n_c4_only) * (n_both_drop + n_gopher_only))"
-            " * 1000000L div (n_docs * n_docs)"
-        ),
-    )
-    return p.select(
-        "source",
-        "n_docs",
-        "n_both_keep",
-        "n_both_drop",
-        "n_gopher_only",
-        "n_c4_only",
-        "po_ppm",
-        "pe_ppm",
-        F.expr(
-            "(po_ppm - pe_ppm) * 1000000L"
-            " div greatest(1000000L - pe_ppm, 1L)"
-        ).alias("kappa_ppm"),
-    ).orderBy("source")
-
-
-def _word_census_cte(v: str) -> str:
-    """The corpus word census as a CTE — shared by the Zipf and coverage
-    oracles (and semantically the same exploded-token groupBy the
-    unigram trainer's seed fit runs)."""
-    return f"""{v} AS (
-        SELECT tok, CAST(COUNT(*) AS BIGINT) AS n
-        FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
-        WHERE tok <> '' GROUP BY tok
-    )"""
-
-
-def _zipf_oracle() -> str:
-    """Oracle for :func:`zipf_fit_report`: the same census, ROW_NUMBER
-    rank, and the SAME generated floor-log2 threshold ladder (shared
-    verbatim with the Spark plan — never a libm log)."""
-    from retail_aws_etl_pipeline_spark.operators.sketch import floor_log2_sql
-
-    return f"""
-    WITH {_word_census_cte("zf_v")},
-    zf_r AS (
-        SELECT n, ROW_NUMBER() OVER (ORDER BY n DESC, tok ASC) AS rank
-        FROM zf_v
-    ),
-    zf_t AS (SELECT CAST(SUM(n) AS BIGINT) AS total FROM zf_v),
-    zf_b AS (
-        SELECT CAST({floor_log2_sql("rank")} AS BIGINT) AS bucket,
-               CAST(COUNT(*) AS BIGINT) AS n_types,
-               CAST(SUM(n) AS BIGINT) AS occ,
-               CAST(MAX(n) AS BIGINT) AS top_freq
-        FROM zf_r GROUP BY 1
-    )
-    SELECT b.bucket,
-           CAST(CAST(1 AS BIGINT) << CAST(b.bucket AS INT) AS BIGINT)
-               AS first_rank,
-           b.n_types, b.occ,
-           CAST(b.occ * 1000000 // t.total AS BIGINT) AS mass_ppm,
-           b.top_freq,
-           CAST({floor_log2_sql("b.top_freq")} AS BIGINT) AS llq_top
-    FROM zf_b b, zf_t t ORDER BY b.bucket
-    """
-
-
-ZIPF_FIT_ORACLE = _zipf_oracle()
-
-
-def zipf_fit_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED r17: Zipf-law fit census over the corpus word frequencies —
-    the tokenizer/vocab-planning diagnostic (Zipf 1949; every natural
-    corpus should show log-frequency falling ~linearly in log-rank, and
-    a corpus that DOESN'T — a flat head or a truncated tail — signals
-    boilerplate flooding or dedup damage). Types are ranked by
-    (frequency desc, token asc) via the factored _distributed_rank (one
-    range exchange over the VOCAB, never a global window), bucketed by
-    floor(log2(rank)) through the same generated threshold ladder the
-    oracle embeds, and each octave reports types, occurrence mass (ppm,
-    single-floor), top frequency and its floor-log2 — adjacent llq_top
-    deltas read out the Zipf slope in whole bits. Envelope: occ * 1e6
-    exact for per-corpus token counts < 9.2e12 (shard above). Scale:
-    census = one map-combined token exchange; rank = one vocab-scale
-    range exchange; the report is ≤52 rows."""
-    from retail_aws_etl_pipeline_spark.operators import sketch as SK
-    from retail_aws_etl_pipeline_spark.operators.caching import (
-        retained_caches,
-        retaining,
-    )
-    from retail_aws_etl_pipeline_spark.plans.analytics import _distributed_rank
-
-    docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    census = (
-        docs.select(F.explode(F.split("text", " ")).alias("tok"))
-        .filter(F.col("tok") != "")
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    ranked = _distributed_rank(
-        census, [F.desc("n"), F.asc("tok")], out_col="rank"
-    )
-    tot = ranked.agg(F.sum("n").cast("long").alias("__total"))
-    out = (
-        ranked.withColumn(
-            "bucket", F.expr(SK.floor_log2_sql("rank")).cast("long")
-        )
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_types"),
-            F.sum("n").cast("long").alias("occ"),
-            F.max("n").cast("long").alias("top_freq"),
-        )
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "bucket",
-            F.expr("shiftleft(1L, CAST(bucket AS INT))").alias("first_rank"),
-            "n_types",
-            "occ",
-            F.expr("occ * 1000000L div __total").alias("mass_ppm"),
-            "top_freq",
-            F.expr(SK.floor_log2_sql("top_freq")).cast("long").alias("llq_top"),
-        )
-        .orderBy("bucket")
-    )
-    return retaining(out, *retained_caches(ranked))
-
-
-#: Vocabulary sizes the coverage audit reads (powers of 4: head through
-#: a realistic small-tokenizer vocab).
-VOCAB_COVERAGE_KS = (16, 64, 256, 1024, 4096)
-
-
-def _vocab_coverage_oracle() -> str:
-    """Oracle for :func:`vocab_coverage_report`: same census + rank, one
-    conditional-sum row, unrolled per K (single-floor ppm)."""
-    cov_cols = ", ".join(
-        f"CAST(SUM(CASE WHEN rank <= {k} THEN n ELSE 0 END) AS BIGINT)"
-        f" AS cov_{k}"
-        for k in VOCAB_COVERAGE_KS
-    )
-    blocks = " UNION ALL ".join(
-        f"""
-        SELECT CAST({k} AS BIGINT) AS vocab_k,
-               CAST(LEAST({k}, n_types) AS BIGINT) AS n_types_used,
-               cov_{k} AS covered_occ,
-               CAST(cov_{k} * 1000000 // total AS BIGINT) AS coverage_ppm,
-               CAST((total - cov_{k}) * 1000000 // total AS BIGINT) AS oov_ppm
-        FROM vc_a"""
-        for k in VOCAB_COVERAGE_KS
-    )
-    return f"""
-    WITH {_word_census_cte("vc_v")},
-    vc_r AS (
-        SELECT n, ROW_NUMBER() OVER (ORDER BY n DESC, tok ASC) AS rank
-        FROM vc_v
-    ),
-    vc_a AS (
-        SELECT CAST(COUNT(*) AS BIGINT) AS n_types,
-               CAST(SUM(n) AS BIGINT) AS total, {cov_cols}
-        FROM vc_r
-    )
-    SELECT * FROM ({blocks}) ORDER BY vocab_k
-    """
-
-
-VOCAB_COVERAGE_ORACLE = _vocab_coverage_oracle()
-
-
-def vocab_coverage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED r17: vocabulary coverage / OOV-rate audit — the
-    vocab-size-selection number tokenizer planning actually reads: for
-    each candidate vocab size K, the share of corpus token OCCURRENCES
-    covered by the top-K types (frequency desc, token asc — the same
-    total order as the Zipf census) and the residual OOV rate, both in
-    single-floor ppm. The coverage CDF across the K ladder is the
-    curve whose knee picks the vocab size; the unigram/BPE trainers
-    (registered) build the pieces, this audits what a WORD-level vocab
-    of each size would cover. Scale: shares the census + one
-    vocab-scale rank exchange with zipf_fit_report, then ONE
-    conditional-sum row unrolled to |KS| output rows — the coverage
-    read is free once the rank exists."""
-    from retail_aws_etl_pipeline_spark.operators.caching import (
-        retained_caches,
-        retaining,
-    )
-    from retail_aws_etl_pipeline_spark.plans.analytics import _distributed_rank
-
-    docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    census = (
-        docs.select(F.explode(F.split("text", " ")).alias("tok"))
-        .filter(F.col("tok") != "")
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    ranked = _distributed_rank(
-        census, [F.desc("n"), F.asc("tok")], out_col="rank"
-    )
-    agg = ranked.agg(
-        F.count(F.lit(1)).cast("long").alias("n_types"),
-        F.sum("n").cast("long").alias("total"),
-        *[
-            F.sum(F.when(F.col("rank") <= k, F.col("n")).otherwise(F.lit(0)))
-            .cast("long")
-            .alias(f"cov_{k}")
-            for k in VOCAB_COVERAGE_KS
-        ],
-    )
-    rows = agg.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).cast("long").alias("vocab_k"),
-                        F.col(f"cov_{k}").alias("covered_occ"),
-                    )
-                    for k in VOCAB_COVERAGE_KS
-                ]
-            )
-        ).alias("s"),
-        "n_types",
-        "total",
-    )
-    out = rows.select(
-        F.col("s.vocab_k").alias("vocab_k"),
-        F.least(F.col("s.vocab_k"), F.col("n_types"))
-        .cast("long")
-        .alias("n_types_used"),
-        F.col("s.covered_occ").alias("covered_occ"),
-        F.expr("s.covered_occ * 1000000L div total").alias("coverage_ppm"),
-        F.expr("(total - s.covered_occ) * 1000000L div total").alias("oov_ppm"),
-    ).orderBy("vocab_k")
-    return retaining(out, *retained_caches(ranked))
 
 
 # ---------------------------------------------------------------------------

@@ -75,19 +75,15 @@ class QuerySpec:
     tags: tuple[str, ...] = field(default_factory=tuple)
 
 
-#: Driver-facing registry: exactly the queries exposed through ``queries()``
-#: / ``oracle_sql()``. The per-round driver oracle check records hard
-#: correctness rows for at most ~50 entries (observed: CORRECTNESS_r01
-#: stopped at exactly 50, in registration order), so this registry is held
-#: at 50 high-value entries — one per distinct operator shape — and every
-#: redundant variant or evaluation sweep lives in ``EXTRA_REGISTRY``.
+#: The one spec pool: every registered query. ``all_specs()`` returns all
+#: of it. Once every plans module has registered, ``plans/__init__.py``
+#: orders the pool stalest-first by (newest driver row, name), and the
+#: driver window ``queries()`` / ``oracle_sql()`` is its first
+#: ``WINDOW_SIZE`` entries.
 REGISTRY: dict[str, QuerySpec] = {}
 
-#: Locally-verified registry: same QuerySpec contract, same DuckDB oracle
-#: discipline (tests/test_queries_oracle.py parametrizes over BOTH
-#: registries), and still benched — just not exposed to the driver, so the
-#: 50 driver slots all land on distinct load-bearing operators.
-EXTRA_REGISTRY: dict[str, QuerySpec] = {}
+#: Driver checks this many entries per round.
+WINDOW_SIZE = 50
 
 
 def register(name: str, oracle: str | None, description: str = "", tags: tuple[str, ...] = ()):
@@ -98,29 +94,20 @@ def register(name: str, oracle: str | None, description: str = "", tags: tuple[s
     return deco
 
 
-def register_extra(name: str, oracle: str | None, description: str = "", tags: tuple[str, ...] = ()):
-    """Register a variant query outside the driver-facing 50-entry window."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        EXTRA_REGISTRY[name] = QuerySpec(name, fn, oracle, description, tags)
-        return fn
-
-    return deco
-
-
 def all_specs() -> dict[str, QuerySpec]:
-    """Driver-facing + local-only specs merged (names are disjoint)."""
-    merged = dict(REGISTRY)
-    merged.update(EXTRA_REGISTRY)
-    return merged
+    return dict(REGISTRY)
+
+
+def _driver_window() -> list[QuerySpec]:
+    return list(REGISTRY.values())[:WINDOW_SIZE]
 
 
 def queries() -> dict[str, QueryFn]:
-    return {name: spec.spark_fn for name, spec in REGISTRY.items()}
+    return {spec.name: spec.spark_fn for spec in _driver_window()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {name: spec.oracle for name, spec in REGISTRY.items() if spec.oracle is not None}
+    return {spec.name: spec.oracle for spec in _driver_window() if spec.oracle is not None}
 
 
 # ---------------------------------------------------------------------------
@@ -321,30 +308,6 @@ def region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "returned_order_priorities",
-    """
-    SELECT o_orderpriority, COUNT(*) AS n_orders
-    FROM orders
-    WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem WHERE l_returnflag = 'R')
-    GROUP BY o_orderpriority
-    ORDER BY o_orderpriority
-    """,
-    description="Left-semi join (EXISTS): orders with at least one returned line",
-    tags=("join", "semi"),
-)
-def returned_order_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["orders", "lineitem"])
-    returned = t["lineitem"].filter(F.col("l_returnflag") == "R").select("l_orderkey")
-    return (
-        t["orders"]
-        .join(returned, F.col("o_orderkey") == F.col("l_orderkey"), "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-        .orderBy("o_orderpriority")
-    )
-
-
-@register(
     "customers_without_orders",
     """
     SELECT c_custkey, c_name
@@ -363,66 +326,4 @@ def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(t["orders"], F.col("c_custkey") == F.col("o_custkey"), "left_anti")
         .select("c_custkey", "c_name")
         .orderBy("c_custkey")
-    )
-
-
-# ---------------------------------------------------------------------------
-# JSON / scalar function surface (events.props)
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "event_props_stats",
-    """
-    SELECT event_type,
-           CAST(SUM(TRY_CAST(
-               CASE WHEN json_valid(props) THEN
-                   CASE WHEN regexp_matches(
-                            json_extract_string(props, '$.k'),
-                            '^-?[0-9]+$')
-                        THEN json_extract_string(props, '$.k') END
-               END AS BIGINT)) AS DECIMAL(38,0)) AS sum_k,
-           COUNT(*) AS n
-    FROM events
-    GROUP BY event_type
-    ORDER BY event_type
-    """,
-    description="JSON extraction (get_json_object) + agg over events.props",
-    tags=("json", "agg"),
-)
-def event_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["events"])
-    # try_cast, not cast: props is UNTRUSTED content, and under ANSI mode
-    # (the Spark 4 default) a non-numeric $.k crashes the whole query;
-    # DuckDB's plain CAST errors identically, hence TRY_CAST in the
-    # oracle too. Invalid values count toward n but not sum_k — the
-    # reject-tagging philosophy of the ingest path (r12 adversarial
-    # corpus finding).
-    return (
-        t["events"]
-        # One JSON parse per row: the guard and the cast both read this
-        # projected column (the r13 plan evaluated get_json_object twice
-        # inside the aggregate — the round's one perf flag).
-        .withColumn("k_raw", F.get_json_object("props", "$.k"))
-        .groupBy("event_type")
-        .agg(
-            # sum in DECIMAL(38,0): adversarial k values at the int64
-            # boundary overflow a long SUM under ANSI, while DuckDB
-            # promotes SUM(BIGINT) to HUGEINT — widening both sides keeps
-            # the pair exact and crash-free.
-            # Integral-pattern guard on BOTH engines (ADVICE r12): the
-            # engines' TRY_CASTs disagree on decimal text — DuckDB
-            # TRY_CAST('1.5' AS BIGINT) parses and ROUNDS to 2, Spark
-            # try_cast yields NULL — so only ^-?[0-9]+$ values count
-            # toward sum_k on either side. Out-of-int64-range integral
-            # strings TRY_CAST to NULL identically on both.
-            F.sum(
-                F.when(
-                    F.col("k_raw").rlike("^-?[0-9]+$"),
-                    F.col("k_raw").try_cast("bigint"),
-                ).cast("decimal(38,0)")
-            ).alias("sum_k"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .orderBy("event_type")
     )

@@ -13,8 +13,8 @@ map directly onto Structured Streaming:
 | dedup-by-key across batches          | watermarked dropDuplicates         |
 | sessionization                       | session_window(ts, gap)            |
 
-Each streaming aggregation has a batch twin in the query registry
-(hourly_event_rollup, dedup_keep_latest, user_sessions) — tests assert the
+Each streaming aggregation has a batch twin (the hourly window groupBy,
+dedup_keep_latest, user_sessions) — tests assert the
 streaming result converges to the batch result, which is the strongest
 correctness statement available for non-SQL-expressible stateful ops.
 """
@@ -112,7 +112,8 @@ def events_stream(
 
 
 def hourly_rollup_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Streaming twin of the ``hourly_event_rollup`` batch query."""
+    """Streaming hourly (window_start, event_type) rollup; the registered
+    ``streamed_hourly_rollup`` spec checks it against its batch oracle."""
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")

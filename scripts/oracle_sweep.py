@@ -2,7 +2,7 @@
 """Full-registry oracle sweep at an arbitrary scale factor.
 
 The driver gate and the local suite compare at sf0.01; this reproducer
-runs EVERY oracle-paired spec (both registries) against DuckDB at the
+runs EVERY oracle-paired spec in ``all_specs()`` against DuckDB at the
 given sf_dir — the sweep that caught the unpinned-repartitionByRange bug
 at r11 and re-proves the correlated-series oracle rewrites at sf0.1.
 The sf0.01-PINNED oracles (fit literals derive from the sf0.01 parquet:
@@ -73,22 +73,6 @@ def _staged_pairs():
             E.hash_sample_quantile_report,
             E.HASH_SAMPLE_ORACLE,
         ),
-        # staged r17 tranche completion (built r15): all corpus-generic
-        # (the agreement oracle shares the registered gate fragments;
-        # the rank-spectrum oracles embed only the generated log2
-        # ladder; the streamed sketch re-derives registers from scratch)
-        (
-            "streamed_hll_snapshot_report",
-            E.streamed_hll_snapshot_report,
-            E.STREAMED_HLL_SNAPSHOT_ORACLE,
-        ),
-        (
-            "quality_gate_agreement_report",
-            E.quality_gate_agreement_report,
-            E.QUALITY_GATE_AGREEMENT_ORACLE,
-        ),
-        ("zipf_fit_report", E.zipf_fit_report, E.ZIPF_FIT_ORACLE),
-        ("vocab_coverage_report", E.vocab_coverage_report, E.VOCAB_COVERAGE_ORACLE),
         # staged r18 seeds (built r15): the streamed count-min twin
         # (verbatim batch oracle) + the quantized-PSI drift monitor —
         # both corpus-generic.

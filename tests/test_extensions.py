@@ -1,21 +1,14 @@
-"""Tolerance gates for the approximate-sketch kernels.
+"""LLM-data extension operators: approximate and deterministic sketch
+kernels, language-model and quality censuses, dedup and curation reports.
 
-``approx_sketch_stats`` is deliberately not driver-facing: sketch internals
-(HyperLogLog registers, GK/KLL summaries) differ per engine, so no hash
-oracle can exist for it. Its accuracy is proven here instead, against the
-exact twin ``sketch_accuracy_stats`` (which IS hash-checked by the driver):
-
-- ``approx_count_distinct(col, rsd)``: relative error gated at 3*rsd
-  (HLL standard-error bound; 3 sigma ~ 99.7%).
-- ``approx_percentile(col, p, accuracy)``: rank-error gated at
-  n/accuracy + 1 — the documented GK guarantee — by recomputing the
-  actual rank of each approximate quantile value against the base table.
+Handcrafted semantics, pure-Python mirrors and executed-plan gates. The
+sf0.01 DuckDB compare of every registered spec runs in
+tests/test_queries_oracle.py.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -23,94 +16,13 @@ from retail_aws_etl_pipeline_spark.plans import all_specs
 from retail_aws_etl_pipeline_spark.session import load_tables
 from tests.conftest import SF_ORACLE
 
-#: Mirrors the kernel parameters inside approx_sketch_stats.
-HLL_RSD = 0.01
-GK_ACCURACY = 10000  # Spark default for approx_percentile
-
-
-def test_approx_sketch_within_tolerance(spark):
-    # approx_sketch_stats left the registry outright at r15 (the
-    # deterministic hll_distinct_report put the sketch surface under the
-    # hash gate); the HLL++/GK tolerance gate keeps pinning the
-    # UNREGISTERED spec so the engine-private kernels stay accuracy-proven.
-    from retail_aws_etl_pipeline_spark.plans import UNREGISTERED
-
-    specs = all_specs()
-    approx = {
-        r["l_returnflag"]: r
-        for r in UNREGISTERED["approx_sketch_stats"]
-        .spark_fn(spark, SF_ORACLE)
-        .collect()
-    }
-    exact = {
-        r["l_returnflag"]: r
-        for r in specs["sketch_accuracy_stats"].spark_fn(spark, SF_ORACLE).collect()
-    }
-    assert set(approx) == set(exact) and approx, "group keys must line up"
-
-    lineitem = load_tables(spark, SF_ORACLE, ["lineitem"])["lineitem"]
-    # One pass: per (flag, percentile-label) rank of the approx value.
-    rank_rows = (
-        lineitem.groupBy("l_returnflag")
-        .agg(
-            *[
-                F.sum(
-                    (F.col("l_extendedprice") <= F.lit(approx_row[label])).cast("long")
-                ).alias(f"rank_{label}_{flag}")
-                for flag, approx_row in approx.items()
-                for label in ("p50", "p90", "p99")
-            ]
-        )
-        .collect()
-    )
-    ranks = {r["l_returnflag"]: r for r in rank_rows}
-
-    for flag, a in approx.items():
-        e = exact[flag]
-        n = e["n"]
-        assert a["n"] == n, f"{flag}: exact COUNT(*) must agree"
-
-        # HLL: |approx - exact| / exact <= 3 * rsd
-        rel = abs(a["approx_parts"] - e["distinct_parts"]) / e["distinct_parts"]
-        assert rel <= 3 * HLL_RSD, (
-            f"{flag}: approx_count_distinct off by {rel:.4f} "
-            f"(> {3 * HLL_RSD}): {a['approx_parts']} vs {e['distinct_parts']}"
-        )
-
-        # GK: the returned value's true rank within n/accuracy + 1 of target.
-        tol = n / GK_ACCURACY + 1
-        for label, p in (("p50", 0.5), ("p90", 0.9), ("p99", 0.99)):
-            actual_rank = ranks[flag][f"rank_{label}_{flag}"]
-            target_rank = p * n
-            assert abs(actual_rank - target_rank) <= tol, (
-                f"{flag}/{label}: rank {actual_rank} vs target {target_rank} "
-                f"(tol {tol}) for approx value {a[label]}"
-            )
-
 
 def test_sketch_window_membership():
-    """The exact twin stays driver-checkable (oracle'd — window membership
-    itself rotates under the COVERAGE.md §rotation SLO, enforced by
-    test_window_slo.py); since r15 the approx sketch is UNREGISTERED
-    outright (hll_distinct_report carries the hash-gated sketch surface;
-    the local tolerance gate above keeps the HLL++/GK kernels proven) and
-    the RETIRED table is empty — every registered entry is oracle'd."""
-    from retail_aws_etl_pipeline_spark.plans import (
-        EXTRA_REGISTRY,
-        REGISTRY,
-        RETIRED,
-        UNREGISTERED,
-    )
-    from retail_aws_etl_pipeline_spark.plans.queries import all_specs
-
+    """Both the exact quantile twin and the deterministic HLL carry a
+    hash oracle, and so does every other registered entry — the whole
+    pool is hash-checkable."""
     assert all_specs()["sketch_accuracy_stats"].oracle is not None
     assert all_specs()["hll_distinct_report"].oracle is not None
-    assert "approx_sketch_stats" not in REGISTRY
-    assert "approx_sketch_stats" not in EXTRA_REGISTRY
-    assert "approx_sketch_stats" in UNREGISTERED
-    assert RETIRED == {}
-    # the whole driver window must be hash-checkable (VERDICT r5 #1) —
-    # and with RETIRED empty, so must the ENTIRE registry.
     oracle_less = [n for n, s in all_specs().items() if s.oracle is None]
     assert oracle_less == [], f"registry has unprovable entries: {oracle_less}"
 
@@ -349,15 +261,23 @@ def test_containment_prefix_on_boilerplate_corpus(spark):
         jaccard_counts,
         shingles,
     )
-    from retail_aws_etl_pipeline_spark.plans.extensions import (
-        CONTAINMENT_PCT,
-        boilerplate_docs,
-    )
+    from retail_aws_etl_pipeline_spark.plans.extensions import CONTAINMENT_PCT
     from retail_aws_etl_pipeline_spark.session import load_tables
     from tests.conftest import SF_ORACLE
 
-    docs = boilerplate_docs(
-        load_tables(spark, SF_ORACLE, ["documents"])["documents"]
+    # Every third doc gets a fixed ~20-token boilerplate tail (site
+    # chrome, license footers): the hot-gram skew the prefix filter exists
+    # for. Deterministic: no files, no RNG.
+    tail = (
+        "subscribe to our newsletter terms of service apply all rights reserved "
+        "cookie policy contact us privacy statement follow us on social media"
+    )
+    docs = load_tables(spark, SF_ORACLE, ["documents"])["documents"]
+    docs = docs.withColumn(
+        "text",
+        F.when(
+            F.col("doc_id") % 3 == 0, F.concat(F.col("text"), F.lit(" " + tail))
+        ).otherwise(F.col("text")),
     )
     grams = shingles(docs).persist()
     brute = {
@@ -527,9 +447,6 @@ def test_funnel_step_latency_handcrafted(spark):
     median 10; click->purchase {30} -> 30."""
     import datetime as dt
 
-    from retail_aws_etl_pipeline_spark.plans.analytics import funnel_step_latency
-    from retail_aws_etl_pipeline_spark.plans.queries import EXTRA_REGISTRY, REGISTRY
-
     def ts(sec):
         return dt.datetime(2024, 1, 1, 0, 0, sec)
 
@@ -548,7 +465,7 @@ def test_funnel_step_latency_handcrafted(spark):
 
     with tempfile.TemporaryDirectory() as d:
         df.write.parquet(os.path.join(d, "events.parquet"))
-        spec = REGISTRY.get("funnel_step_latency") or EXTRA_REGISTRY["funnel_step_latency"]
+        spec = all_specs()["funnel_step_latency"]
         got = {
             r.step: (r.n_users, r.p50_gap_us)
             for r in spec.spark_fn(spark, d).collect()

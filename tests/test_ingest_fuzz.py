@@ -98,3 +98,61 @@ def test_ingest_all_rows_rejected_counts_resolve(spark, tmp_path):
     assert c["good_rows"] == 0
     assert c["structural_rejects"] == 2
     assert c["data_rows"] == c["good_rows"] + c["reject_rows"] + c["duplicates_removed"]
+
+
+_HEADER = "transaction_id,store_id,timestamp,item_id,quantity,unit_price,revenue"
+
+
+def _ingest_all_reject(spark, tmp_path, monkeypatch, rows):
+    """Ingest a file whose every row is rejected and return its counts,
+    asserting the counts came through the explicit-aggregation fallback
+    (the pruned-Observation error was seen and recognised)."""
+    from retail_aws_etl_pipeline_spark.operators import validate
+
+    seen = []
+    real = validate._is_pruned_observation
+
+    def spy(err):
+        seen.append(real(err))
+        return seen[-1]
+
+    monkeypatch.setattr(validate, "_is_pruned_observation", spy)
+    path = str(tmp_path / "allreject.csv")
+    with open(path, "w") as f:
+        f.write("\n".join([_HEADER, *rows]) + "\n")
+    lake = LakeLayout(str(tmp_path / "lake"))
+    result = ingest_file(spark, path, lake, archive=False, write_reject_csv=False)
+    assert result.status == "ok"
+    assert seen and all(seen), seen
+    return result.counts
+
+
+def test_all_invalid_timestamps_count_through_the_fallback(spark, tmp_path, monkeypatch):
+    rows = [f"T{i},S01,not a date,ITEM{i},2,$3.00,$6.00" for i in range(5)]
+    c = _ingest_all_reject(spark, tmp_path, monkeypatch, rows)
+    assert c["timestamp_rejects"] == 5
+    assert c["good_rows"] == 0
+
+
+def test_all_negative_quantities_count_through_the_fallback(spark, tmp_path, monkeypatch):
+    rows = [f"T{i},S01,2024-10-16 14:30:25,ITEM{i},-2,$3.00,$6.00" for i in range(5)]
+    c = _ingest_all_reject(spark, tmp_path, monkeypatch, rows)
+    assert c["business_rejects"] == 5
+    assert c["good_rows"] == 0
+
+
+def test_other_observation_errors_propagate(spark):
+    """Only the pruned-Observation error falls back; anything else (here a
+    plain RuntimeError from the metrics read) surfaces to the caller."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from retail_aws_etl_pipeline_spark.operators.validate import observed_or_aggregated
+
+    class BrokenObservation:
+        @property
+        def get(self):
+            raise RuntimeError("metrics unavailable")
+
+    with pytest.raises(RuntimeError, match="metrics unavailable"):
+        observed_or_aggregated(BrokenObservation(), spark.range(3), [F.count(F.lit(1))])

@@ -10,14 +10,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from retail_aws_etl_pipeline_spark.plans import UNREGISTERED, all_specs
-
-# Plan-shape gates keep pinning unregistered implementations too (the
-# UNREGISTERED-store policy: a rotation swap must not relax a plan gate);
-# all_specs() wins on any (impossible) name collision.
-REGISTRY = {**UNREGISTERED, **all_specs()}
+from retail_aws_etl_pipeline_spark.plans import all_specs
 from retail_aws_etl_pipeline_spark.session import load_tables
 from tests.conftest import SF_SMOKE
+
+
+REGISTRY = all_specs()
 
 
 def _plan(df) -> str:
@@ -78,12 +76,6 @@ def test_agg_queries_stay_in_codegen(spark):
         assert "isFinalPlan=true" in plan, f"{name}: {plan[:500]}"
         starred = [ln for ln in plan.splitlines() if ln.lstrip("+- ").startswith("*(")]
         assert any("HashAggregate" in ln for ln in starred), f"{name}: {plan[:1500]}"
-
-
-def test_semi_join_not_inner(spark):
-    """IN-subquery shapes must plan LeftSemi (no row multiplication)."""
-    plan = _plan(REGISTRY["returned_order_priorities"].spark_fn(spark, SF_SMOKE))
-    assert "LeftSemi" in plan, plan[:2000]
 
 
 def test_q6_filters_push_to_scan(spark):
@@ -275,42 +267,6 @@ def test_customer_spend_deciles_no_global_window(spark):
     assert "ShuffledHashJoin" not in plan
 
 
-def test_bm25_plan_is_scan_side(spark):
-    """bm25_query_scores: tf/dl are array expressions on the scan (no
-    explode/generate), corpus stats come back via broadcast (nested-loop
-    on a 1-row frame is fine; never a shuffled join), ranking is
-    TakeOrderedAndProject, and the scan prunes to doc_id + text."""
-    # unregistered at r12 (bm25_multi_query_topk carries the surface);
-    # the implementation + this plan gate stay, called directly.
-    from retail_aws_etl_pipeline_spark.plans.extensions import bm25_query_scores
-
-    df = bm25_query_scores(spark, SF_SMOKE)
-    plan = _plan(df)
-    assert "TakeOrderedAndProject" in plan
-    assert "Generate" not in plan  # no explode: tf via size(filter(...))
-    assert "SortMergeJoin" not in plan
-    assert "ShuffledHashJoin" not in plan
-    read_schema = next(ln for ln in plan.splitlines() if "ReadSchema" in ln)
-    assert "text" in read_schema and "doc_id" in read_schema
-    assert "lang" not in read_schema and "source" not in read_schema
-
-
-def test_bpe_pair_stats_plan(spark):
-    """bpe_pair_stats: ONE map-side-combined groupBy over the exploded
-    pair stream, TakeOrderedAndProject ranking, scan pruned to
-    doc_id + text."""
-    # unregistered at r12 (the trainer + collocation_pairs carry the
-    # layers); the implementation + this plan gate stay, called directly.
-    from retail_aws_etl_pipeline_spark.plans.extensions import bpe_pair_stats
-
-    df = bpe_pair_stats(spark, SF_SMOKE)
-    plan = _plan(df)
-    assert "TakeOrderedAndProject" in plan
-    assert "partial_count" in plan or "HashAggregate" in plan
-    read_schema = next(ln for ln in plan.splitlines() if "ReadSchema" in ln)
-    assert "text" in read_schema and "lang" not in read_schema
-
-
 def test_dedup_retained_corpus_partitions_the_corpus(spark):
     """Survivors are exactly one per cluster: their count equals the
     distinct cluster count of near_dup_clusters, every survivor is its
@@ -340,39 +296,6 @@ def test_bm25_multi_plan_shape(spark):
     assert "WindowGroupLimit" in plan
     read_schema = next(ln for ln in plan.splitlines() if "ReadSchema" in ln)
     assert "text" in read_schema and "lang" not in read_schema
-
-
-def test_char_bigram_fluency_plan(spark):
-    """The bigram 'model' joins back by BROADCAST (vocab is charset²-
-    bounded), ranking is TakeOrderedAndProject, scan pruned to
-    doc_id + text."""
-    # unregistered at r15 (doc_perplexity_report is the registered
-    # smoothed successor); the implementation + this plan gate stay.
-    from retail_aws_etl_pipeline_spark.plans.extensions import char_bigram_fluency
-
-    df = char_bigram_fluency(spark, SF_SMOKE)
-    plan = _plan(df)
-    assert "BroadcastHashJoin" in plan, plan[:2000]
-    assert "TakeOrderedAndProject" in plan
-    assert "SortMergeJoin" not in plan
-    read_schema = next(ln for ln in plan.splitlines() if "ReadSchema" in ln)
-    assert "text" in read_schema and "lang" not in read_schema
-
-
-def test_token_chunk_dedup_plan(spark):
-    """Span dedup must be the groupBy+join shape — no Window over the
-    span stream (a window would sort every span partition), no driver
-    collect, scan pruned to doc_id + text."""
-    # unregistered at r12 (cdc_chunk_dedup is the registered successor);
-    # the implementation + this plan gate stay, called directly.
-    from retail_aws_etl_pipeline_spark.plans.extensions import token_chunk_dedup
-
-    df = token_chunk_dedup(spark, SF_SMOKE)
-    plan = _plan(df)
-    assert "WindowExec" not in plan and "RunningWindowFunction" not in plan
-    assert "CartesianProduct" not in plan
-    read_schema = next(ln for ln in plan.splitlines() if "ReadSchema" in ln)
-    assert "text" in read_schema and "source" not in read_schema
 
 
 def test_semantic_dedup_anti_join_on_cluster(spark):
@@ -412,31 +335,6 @@ def test_tfidf_top_terms_plan(spark):
     assert "SortMergeJoin" not in plan
     read_schema = next(ln for ln in plan.splitlines() if "ReadSchema" in ln)
     assert "text" in read_schema and "lang" not in read_schema
-
-
-def test_lang_rebalanced_sample_zero_shuffle(spark):
-    """The hash-gate sample is a pure scan-side projection: no Exchange of
-    any kind before the final presentation sort, no joins, no windows —
-    the property that makes it streaming/backfill-safe at any scale."""
-    # unregistered at r15 (temperature_mixture_report derives the config
-    # this sampler consumes; corpus_mixture_sample keeps the hash-gate
-    # selection registered); the implementation + this plan gate stay.
-    from retail_aws_etl_pipeline_spark.plans.extensions import (
-        lang_rebalanced_sample,
-    )
-
-    df = lang_rebalanced_sample(spark, SF_SMOKE)
-    # Strip the orderBy: presentation-only (the driver compare is
-    # order-insensitive); the operator itself is the filter projection.
-    core = df._jdf.queryExecution().executedPlan().toString()
-    body = core[core.index("Sort") :] if "Sort" in core else core
-    assert "SortMergeJoin" not in core and "ShuffledHashJoin" not in core
-    assert "BroadcastHashJoin" not in core and "Window" not in core
-    # exactly the one range-partitioning exchange the global sort needs
-    assert core.count("Exchange") <= 1, core
-    read_schema = next(ln for ln in core.splitlines() if "ReadSchema" in ln)
-    assert "doc_id" in read_schema and "lang" in read_schema
-    assert "text" not in read_schema
 
 
 def test_cluster_topic_terms_plan(spark):
@@ -529,18 +427,6 @@ def test_item_affinity_plan_shape(spark):
         assert col not in plan, f"scan not pruned: reads {col}"
 
 
-def test_partkey_skew_report_windows_are_histogram_bounded(spark):
-    """The Gini window may be unpartitioned ONLY because it runs over the
-    count-of-counts histogram (cardinality = distinct per-key counts);
-    assert the top-10 share rides a TakeOrderedAndProject, not a full
-    sort, and the fact scan prunes to the key column."""
-    df = REGISTRY["partkey_skew_report"].spark_fn(spark, SF_SMOKE)
-    plan = _plan(df)
-    assert "TakeOrderedAndProject" in plan
-    for col in ("l_extendedprice", "l_comment", "l_quantity"):
-        assert col not in plan, f"scan not pruned: reads {col}"
-
-
 def test_sequential_item_rules_plan_shape(spark):
     """The order-sequence window partitions by customer (keyed, never a
     global window); basket joins are equi-joins; the only cross join is
@@ -602,20 +488,6 @@ def test_product_type_profit_pushes_type_filter(spark):
         assert col not in plan, f"scan not pruned: reads {col}"
 
 
-def test_part_revenue_share_single_broadcast_total(spark):
-    """Q11 shape: the scalar-subquery threshold is realized as ONE
-    broadcast nested-loop join of the 1-row total — never a shuffled
-    join, never a second scan-side aggregation of lineitem."""
-    df = REGISTRY["part_revenue_share"].spark_fn(spark, SF_SMOKE)
-    plan = _plan(df)
-    assert plan.count("BroadcastNestedLoopJoin") == 1
-    assert "SortMergeJoin" not in plan
-    assert "ShuffledHashJoin" not in plan
-    # one lineitem scan feeds both the per-part agg and (via reuse or the
-    # agg output) the total — the plan must not scan lineitem twice
-    assert plan.count("lineitem.parquet") <= 2
-
-
 def test_sole_return_suppliers_topk_and_no_subquery_scans(spark):
     """Q21 shape: the EXISTS/NOT-EXISTS pair is rewritten into keyed
     aggregates — the executed plan has no broadcast-nested-loop or
@@ -628,18 +500,6 @@ def test_sole_return_suppliers_topk_and_no_subquery_scans(spark):
     assert "BroadcastNestedLoopJoin" not in plan
     for col in ("l_extendedprice", "l_comment", "l_quantity"):
         assert col not in plan, f"scan not pruned: reads {col}"
-
-
-def test_monthly_revenue_yoy_no_window(spark):
-    """YoY uses the time-shifted self-join, NOT LAG(12) — the executed
-    plan must contain no Window operator at all, and the year-ago side
-    joins broadcast (date-domain bounded aggregate)."""
-    import re
-
-    df = REGISTRY["monthly_revenue_yoy"].spark_fn(spark, SF_SMOKE)
-    plan = _plan(df)
-    assert not re.search(r"\bWindow \[", plan), "unexpected Window operator"
-    assert "BroadcastHashJoin" in plan
 
 
 def test_customer_order_gap_stats_windows_are_keyed_or_histogram(spark):
@@ -657,36 +517,6 @@ def test_customer_order_gap_stats_windows_are_keyed_or_histogram(spark):
         assert ("o_custkey" in ln) or ("c_mktsegment" in ln), (
             f"unkeyed window: {ln.strip()[:200]}"
         )
-
-
-def test_edit_distance_pairs_salted_equi_join(spark):
-    """The blocked levenshtein join must be a salted EQUI-join on
-    (bucket, salt) — no cartesian / nested-loop candidate generation —
-    and the verify must use the thresholded builtin levenshtein
-    (JVM-side, no BatchEvalPython)."""
-    # Unregistered at r9 (LSH production twin carries the driver row);
-    # the salted-equi-join kernel stays in the package and stays gated.
-    from retail_aws_etl_pipeline_spark.plans.extensions import (
-        edit_distance_near_pairs,
-    )
-
-    df = edit_distance_near_pairs(spark, SF_SMOKE)
-    plan = _plan(df)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "levenshtein" in plan
-    assert "salt_l" in plan and "salt_r" in plan, "salted join keys missing"
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    # The verify-parallelism fix: the left side must reach the join via a
-    # user-pinned (REPARTITION_BY_NUM) hash exchange on (bucket, salt) —
-    # without the explicit count, AQE coalesces the few-MB exchange back
-    # to ONE partition and the O(len x T) verify runs single-task
-    # (measured 43 s -> 4.5 s at sf0.1; SCALING.md blocking study).
-    assert any(
-        "REPARTITION_BY_NUM" in ln and "bkt_l" in ln and "salt_l" in ln
-        for ln in plan.splitlines()
-        if "Exchange" in ln
-    ), "pinned (bucket, salt) repartition missing from the executed plan"
 
 
 def test_edit_distance_lsh_banded_equi_join(spark):

@@ -1,72 +1,14 @@
-"""Twin-equivalence pins for the drafted r13 cap replacements.
+"""Twin-equivalence pin for the duplicated-span report.
 
-The r12-session job per ROADMAP's "r13 schedule": every r13 swap's twin
-relation must be pinned by a test BEFORE r13 opens, so unregistering the
-weakest variant provably keeps its semantics on the driver proof
-surface. One test per pairing:
-
-1. gopher_repetition_report ↔ doc_token_stats — the per-doc token-count
-   layer stays registered: tokenizer_fertility_by_lang's per-language
-   sums ARE the rollup of doc_token_stats' per-doc columns (shared
-   kernels: token_count / word_token_count / length).
-2. duplicated_span_report ↔ doc_fingerprints — the span report is the
-   strictly stronger exact-dup signal: any fp_exact collision is a
-   full-length duplicated span.
-3. c4_clean_report ↔ median_order_by_priority — the discrete-median
-   surface stays via the registered _grouped_lower_median histogram
-   kernel (customer_order_gap_stats / event_value_mad_outliers).
-4. dedup_retained_by_quality ↔ segment_buyers_intersect — INTERSECT is
-   the left-semi-join-of-distincts composition (the set-op surface the
-   registered U1/U2 carriers keep).
-5. ngram_lm_report ↔ supplier_nation_volume — the fact-to-broadcast-dims
-   volume agg equals its partial-aggregation-pushdown form (the shape
-   the registered Q5/Q7/Q8/Q9 carriers share).
-6. training_shard_manifest ↔ top_revenue_suppliers — the max-of-
-   aggregate scalar equals the single-buffer struct-argmax kernel's
-   answer, and the join-back keeps exactly the tied rows.
+duplicated_span_report ↔ doc_fingerprints — the span report is the
+strictly stronger exact-dup signal: any fp_exact collision is a
+full-length duplicated span.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from retail_aws_etl_pipeline_spark.operators import dedup as D
 from retail_aws_etl_pipeline_spark.operators import textops as TX
-from retail_aws_etl_pipeline_spark.plans.queries import DEC
-from retail_aws_etl_pipeline_spark.session import load_tables
-from tests.conftest import SF_ORACLE
-
-
-def test_doc_token_stats_layer_stays_via_fertility_rollup(spark):
-    """tokenizer_fertility_by_lang's per-language token/char sums are
-    exactly the groupBy(lang) rollup of doc_token_stats' per-doc layer —
-    the token-counting surface survives the r13 swap of the per-doc
-    form."""
-    from retail_aws_etl_pipeline_spark.plans.extensions import (
-        doc_token_stats,
-        tokenizer_fertility_by_lang,
-    )
-
-    docs = load_tables(spark, SF_ORACLE, ["documents"])["documents"]
-    per_doc = doc_token_stats(spark, SF_ORACLE).join(
-        docs.select("doc_id", "lang"), "doc_id"
-    )
-    rolled = {
-        r.lang: (r.n_docs, r.ws, r.word, r.chars)
-        for r in per_doc.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_ws_tokens").alias("ws"),
-            F.sum("n_word_tokens").alias("word"),
-            F.sum("n_chars_m").alias("chars"),
-        )
-        .collect()
-    }
-    fert = {
-        r.lang: (r.n_docs, r.n_ws_tokens, r.n_word_tokens, r.n_chars)
-        for r in tokenizer_fertility_by_lang(spark, SF_ORACLE).collect()
-    }
-    assert rolled == fert and rolled, (rolled, fert)
 
 
 def test_span_report_supersedes_exact_fingerprints(spark):
@@ -88,141 +30,3 @@ def test_span_report_supersedes_exact_fingerprints(spark):
         assert spans[d].dup_tokens == n
         assert spans[d].longest_span_tokens == n
     assert spans[2].n_dup_spans == 0 and spans[2].dup_tokens == 0
-
-
-def test_median_by_priority_equals_grouped_lower_median_carrier(spark):
-    """median_order_by_priority == the registered histogram lower-median
-    kernel (_grouped_lower_median, the customer_order_gap_stats /
-    event_value_mad_outliers carrier) applied to the
-    (priority, totalprice) histogram — the discrete-percentile surface
-    stays registered after the r13 swap."""
-    from retail_aws_etl_pipeline_spark.plans.analytics import (
-        _grouped_lower_median,
-        median_order_by_priority,
-    )
-
-    want = {
-        r.o_orderpriority: r.median_price
-        for r in median_order_by_priority(spark, SF_ORACLE).collect()
-    }
-    orders = load_tables(spark, SF_ORACLE, ["orders"])["orders"]
-    hist = orders.groupBy(
-        F.col("o_orderpriority").alias("event_type"),
-        F.col("o_totalprice").alias("price"),
-    ).agg(F.count(F.lit(1)).alias("cnt"))
-    got = {
-        r.event_type: r.med
-        for r in _grouped_lower_median(hist, "price").collect()
-    }
-    assert got == want and got, (got, want)
-
-
-def test_segment_intersect_is_semi_join_distinct(spark):
-    """INTERSECT == distinct(left) LEFT SEMI JOIN right — the set-op
-    surface is a composition of the join/distinct primitives every
-    registered carrier exercises; the r13 swap keeps the semantics
-    derivable."""
-    from retail_aws_etl_pipeline_spark.plans.analytics import (
-        segment_buyers_intersect,
-    )
-
-    want = [r.c_custkey for r in segment_buyers_intersect(spark, SF_ORACLE).collect()]
-    t = load_tables(spark, SF_ORACLE, ["customer", "orders"])
-    building = (
-        t["customer"]
-        .filter(F.col("c_mktsegment") == "BUILDING")
-        .select("c_custkey")
-        .distinct()
-    )
-    buyers = t["orders"].select(F.col("o_custkey").alias("c_custkey"))
-    got = [
-        r.c_custkey
-        for r in building.join(buyers, "c_custkey", "left_semi")
-        .orderBy("c_custkey")
-        .collect()
-    ]
-    assert got == want and got
-
-
-def test_supplier_nation_volume_pre_agg_pushdown_identity(spark):
-    """supplier_nation_volume == its partial-aggregation-pushdown form
-    (aggregate the fact by l_suppkey BEFORE the dim joins, re-aggregate
-    after) — exact because the revenue accumulates in DECIMAL(28,6).
-    Pins that the fact-to-broadcast-dims volume shape the registered
-    Q5/Q7/Q8/Q9 carriers share re-derives the swapped-out query."""
-    from retail_aws_etl_pipeline_spark.plans.analytics import (
-        supplier_nation_volume,
-    )
-
-    want = [
-        (r.nation, r.revenue, r.n_lines)
-        for r in supplier_nation_volume(spark, SF_ORACLE).collect()
-    ]
-    t = load_tables(spark, SF_ORACLE, ["lineitem", "supplier", "nation"])
-    partial = (
-        t["lineitem"]
-        .groupBy("l_suppkey")
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(DEC)
-            ).alias("rev_dec"),
-            F.count(F.lit(1)).alias("nl"),
-        )
-    )
-    got = [
-        (r.nation, r.revenue, r.n_lines)
-        for r in partial.join(
-            F.broadcast(t["supplier"]), F.col("l_suppkey") == F.col("s_suppkey")
-        )
-        .join(F.broadcast(t["nation"]), F.col("s_nationkey") == F.col("n_nationkey"))
-        .groupBy(F.col("n_name").alias("nation"))
-        .agg(
-            F.sum("rev_dec").cast("double").alias("revenue"),
-            F.sum("nl").alias("n_lines"),
-        )
-        .orderBy(F.desc("revenue"), F.asc("nation"))
-        .collect()
-    ]
-    assert got == want and got
-
-
-def test_top_supplier_argmax_via_struct_kernel(spark):
-    """top_revenue_suppliers' max-of-aggregate scalar equals the
-    single-buffer struct-argmax (the quality_survivors discipline the
-    registered carriers keep), and the join-back returns exactly the
-    tied rows of the per-supplier aggregate."""
-    from retail_aws_etl_pipeline_spark.plans.analytics import (
-        top_revenue_suppliers,
-    )
-
-    got = {
-        r.s_suppkey: r.total_rev
-        for r in top_revenue_suppliers(spark, SF_ORACLE).collect()
-    }
-    t = load_tables(spark, SF_ORACLE, ["lineitem"])
-    srev = (
-        t["lineitem"]
-        .filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
-        )
-        .groupBy("l_suppkey")
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(DEC)
-            )
-            .cast("double")
-            .alias("total_rev")
-        )
-    )
-    # one aggregation buffer, no join: the struct-argmax kernel
-    arg = srev.agg(
-        F.min(F.struct((-F.col("total_rev")).alias("nr"), "l_suppkey")).alias("m")
-    ).collect()[0].m
-    max_rev = -arg.nr
-    want = {
-        r.l_suppkey: r.total_rev
-        for r in srev.filter(F.col("total_rev") == max_rev).collect()
-    }
-    assert got == want and got
-    assert arg.l_suppkey == min(got)  # kernel's tiebreak: smallest id

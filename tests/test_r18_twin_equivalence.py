@@ -29,7 +29,7 @@ stay on (or derivable from) the registered proof surface:
    walk is THE shared discipline: the EXIF probe's embedded TIFF block
    parses to the same dims through probe_image_dims (both endians,
    byte-level pin); the JPEG marker-scan layer stays locally pinned by
-   the retained exif battery (UNREGISTERED-store rule).
+   the retained exif battery.
 5. source_priority_dedup_report ↔ normalized_dedup_gain — the raw
    md5-distinct leg is a recount of the same md5(text) group frame the
    priority census argmins over; the normalizer layer keeps its

@@ -37,14 +37,12 @@ def events_dir(spark, tmp_path_factory):
 def test_hourly_rollup_stream_matches_batch(spark, events_dir):
     stream = hourly_rollup_stream(events_stream(spark, events_dir))
     got = run_stream_to_memory(stream, "rollup_out", output_mode="complete")
-    # hourly_event_rollup was unregistered at r9 (streamed_hourly_rollup
-    # keeps the identical oracle registered); the batch function remains
-    # the stream's equivalence baseline here.
-    from retail_aws_etl_pipeline_spark.plans.analytics import (
-        hourly_event_rollup,
+    batch = (
+        load_tables(spark, SF_SMOKE, ["events"])["events"]
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total_value"))
+        .select(F.col("w.start").alias("window_start"), "event_type", "n", "total_value")
     )
-
-    batch = hourly_event_rollup(spark, SF_SMOKE)
     g = {(r["window_start"], r["event_type"]): (r["n"], r["total_value"]) for r in got.collect()}
     b = {(r["window_start"], r["event_type"]): (r["n"], r["total_value"]) for r in batch.collect()}
     assert set(g) == set(b)

@@ -1,12 +1,12 @@
 """Driver-window rotation SLO, enforced in code (VERDICT r6 item #6).
 
-The driver hash-checks only the 50 ``REGISTRY`` entries per round; every
-other registry query relies on its archived ``CORRECTNESS_r*.json`` row
+The driver hash-checks only the 50 ``queries()`` entries per round; every
+other registered query relies on its archived ``CORRECTNESS_r*.json`` row
 plus the local sf0.01 oracle run.  The COVERAGE.md §rotation policy says
 no entry's newest hard driver row may be older than 3 rounds — with a
-133-entry registry and a 50-slot window that is exactly the full-swap
-cadence (ceil(133/50) = 3), so the SLO holds iff every rotation promotes
-the stalest tail.  This test reads the archive and fails the build when
+150-entry pool and a 50-slot window that is exactly the full-swap
+cadence (150/50 = 3), so the SLO holds iff every rotation promotes the
+stalest tail.  This test reads the archive and fails the build when
 rotation upkeep lapses, instead of leaving it to prose.
 
 No Spark session needed — pure JSON over the repo root.
@@ -24,7 +24,9 @@ REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 #: Canonical definitions live next to the rotation they govern.
 from retail_aws_etl_pipeline_spark.plans import (  # noqa: E402
     MAX_STALENESS_ROUNDS,
-    RETIRED,
+    WINDOW_SIZE,
+    all_specs,
+    queries,
 )
 
 
@@ -45,20 +47,17 @@ def _archive() -> tuple[int, dict[str, int]]:
 
 
 def test_every_registry_entry_has_a_fresh_driver_row():
-    from retail_aws_etl_pipeline_spark.plans import EXTRA_REGISTRY, REGISTRY
-
     max_round, newest = _archive()
     assert max_round >= 1, "no CORRECTNESS_r*.json archive found"
     # The driver writes CORRECTNESS for round max_round+1 from the CURRENT
-    # REGISTRY, so window membership is a row at round max_round+1.
+    # window, so window membership is a row at round max_round+1.
     upcoming = max_round + 1
     floor = upcoming - MAX_STALENESS_ROUNDS + 1  # oldest acceptable round
 
+    window = queries()
     violations = []
-    for name in sorted(set(REGISTRY) | set(EXTRA_REGISTRY)):
-        if name in RETIRED:
-            continue
-        effective = upcoming if name in REGISTRY else newest.get(name, 0)
+    for name in sorted(all_specs()):
+        effective = upcoming if name in window else newest.get(name, 0)
         if effective < floor:
             violations.append(
                 f"{name}: newest driver row r{newest.get(name, 0) or '—'}, "
@@ -71,34 +70,17 @@ def test_every_registry_entry_has_a_fresh_driver_row():
 
 
 def test_window_is_exactly_the_driver_capacity():
-    from retail_aws_etl_pipeline_spark.plans import REGISTRY
-
-    assert len(REGISTRY) == 50, (
-        f"driver window is {len(REGISTRY)} entries; the driver checks 50 — "
+    assert len(queries()) == WINDOW_SIZE == 50, (
+        f"driver window is {len(queries())} entries; the driver checks 50 — "
         "an underfull window wastes proof slots, an overfull one is cut off"
     )
 
 
 def test_registry_size_within_rotation_budget():
     """COVERAGE.md §rotation: registry growth is capped so the 3-round SLO
-    stays satisfiable — 50 slots/round × 3 rounds = 150 DRIVER-CHECKABLE
-    entries max (the policy's own wording). RETIRED entries are exempt
-    from the SLO (never auto-promoted, no driver row needed), so they
-    don't consume rotation budget — they're capped separately below so
-    the exemption can't become a leak."""
-    from retail_aws_etl_pipeline_spark.plans import (
-        EXTRA_REGISTRY,
-        REGISTRY,
-        RETIRED,
+    stays satisfiable — 50 slots/round × 3 rounds = 150 entries max."""
+    n = len(all_specs())
+    assert n <= WINDOW_SIZE * MAX_STALENESS_ROUNDS, (
+        f"registry has {n} entries; >150 cannot all get a driver row "
+        "within 3 rounds at 50/round — replace a weakest variant instead"
     )
-
-    names = set(REGISTRY) | set(EXTRA_REGISTRY)
-    checkable = len([n for n in names if n not in RETIRED])
-    assert checkable <= 150, (
-        f"registry has {checkable} driver-checkable entries; >150 cannot "
-        "all get a driver row within 3 rounds at 50/round — replace a "
-        "weakest variant instead"
-    )
-    # Retirement is the exception, not a second registry: each retired
-    # entry needs its documented local gate, and the list stays tiny.
-    assert len(RETIRED) <= 3, sorted(RETIRED)
