@@ -16,7 +16,7 @@ library entry point with the same zones and semantics:
 4. archive the input under a lineage name (K6).
 
 Scale notes: the only driver round-trips are the O(1) head sample; all row
-work is one cached Spark plan; class counts are single-pass aggregations
+work is one Spark plan; class counts are single-pass aggregations
 (the reference recomputed the full lineage 5×, SURVEY.md §4).
 """
 
@@ -26,10 +26,17 @@ import json
 import logging
 import os
 from dataclasses import dataclass, field
+from functools import reduce
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
-from retail_aws_etl_pipeline_spark.lake import LakeLayout, lineage_name, move_file, new_run_id
+from retail_aws_etl_pipeline_spark.lake import (
+    LakeLayout,
+    lineage_name,
+    move_file,
+    new_run_id,
+    open_table,
+)
 from retail_aws_etl_pipeline_spark.operators.validate import QualitySplit, split_quality
 from retail_aws_etl_pipeline_spark.schema import build_index_map, missing_required
 from retail_aws_etl_pipeline_spark.sources.reader import read_flexible_csv
@@ -65,55 +72,88 @@ def validate_file_head(path: str, max_bytes: int = 65536) -> list[str]:
     return errors
 
 
-def purge_run_from_silver(spark: SparkSession, lake: LakeLayout, run_id: str) -> int:
-    """Remove any task-committed rows of ``run_id`` from silver.
+def _gate(path: str, lake: LakeLayout, run_id: str, archive: bool) -> IngestResult | None:
+    """File-level gate: quarantine a file failing the head checks to
+    rejected/structural (rejected/system when empty) with a reason file and
+    return its ``file_rejected`` result; None when the file passes."""
+    source_file = os.path.basename(path)
+    file_errors = validate_file_head(path)
+    if not file_errors:
+        return None
+    reject_dir = lake.rejected("structural" if "empty_file" not in file_errors else "system")
+    os.makedirs(reject_dir, exist_ok=True)
+    dst = move_file(path, reject_dir, lineage_name(source_file, run_id)) if archive else path
+    with open(os.path.join(reject_dir, f"{os.path.basename(dst)}_reason.json"), "w") as f:
+        json.dump({"file": source_file, "errors": file_errors}, f)
+    log.warning("file rejected %s: %s", source_file, file_errors)
+    return IngestResult("file_rejected", source_file, run_id, file_errors=file_errors)
 
-    The session's committer (fileoutputcommitter v2) makes task output
-    visible at TASK commit, so a silver append that fails mid-job can leave
-    some of its rows behind. When the source file is then quarantined
-    (never retried), those rows would flow into gold as real transactions
-    from a file the lake says was rejected. This rewrites exactly the date
-    partitions containing the failed run's rows (dynamic partition
-    overwrite), deleting empty partitions outright; rows of other runs in
-    those partitions are preserved. Returns the number of rows purged.
 
-    Failure-path only — the scan to locate debris costs one silver read,
-    paid exclusively when an ingest job has already crashed.
-    """
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    try:
-        silver = spark.read.parquet(lake.processed)
-    except Exception:
-        return 0  # silver does not exist yet → nothing committed
-    if "ingest_run_id" not in silver.columns:
-        return 0
-    debris = silver.filter(F.col("ingest_run_id") == run_id)
-    dates = [r["date"] for r in debris.select("date").distinct().collect()]
-    if not dates:
-        return 0
-    n_debris = debris.count()
-    keep = silver.filter(F.col("date").isin(dates)).filter(
-        F.col("ingest_run_id") != run_id
+def _split(spark, path, run_id, timestamp_patterns, ingest_ts, obs_prefix="") -> QualitySplit:
+    extracted, _meta = read_flexible_csv(spark, path)
+    return split_quality(
+        extracted,
+        ingest_run_id=run_id,
+        source_file=os.path.basename(path),
+        timestamp_patterns=timestamp_patterns,
+        ingest_ts=ingest_ts,
+        obs_prefix=obs_prefix,
     )
-    # dynamic overwrite only rewrites partitions PRESENT in the new data —
-    # dates whose every row came from the failed run must be deleted by path
-    keep_dates = {r["date"] for r in keep.select("date").distinct().collect()}
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+
+
+def _write(spark, silver, lake: LakeLayout, splits: list[QualitySplit], write_reject_csv: bool):
+    """The sinks of one or more splits: ONE silver append of their union,
+    then one reject write (JSON lines, K3; analyst CSV, K4) of the splits
+    that rejected rows.
+
+    Silver is repartitioned by the partition key first: otherwise every
+    task holds rows of every date and a D-date file writes T×D small files
+    (observed 32×550 on the bench); this way each date lands in one task →
+    one file per date. The partition COUNT is explicit: with a bare
+    repartition("date") AQE coalesces the small shuffle to a single task,
+    which then creates every date directory serially (~16 ms each —
+    measured 9 s for 550 dates); pinning N keeps the directory/file
+    creation spread across the cluster.
+
+    The silver write goes FIRST: it is the action that fires the embedded
+    count Observations, so the class counts (and the reject-write decision)
+    cost zero extra jobs."""
+    good = reduce(DataFrame.unionByName, [s.good for s in splits])
+    silver.append(good.repartition(spark.sparkContext.defaultParallelism, "date"))
+    reject_frames = [s.rejects for s in splits if s.resolve_counts()["reject_rows"] > 0]
+    if not reject_frames:
+        return
+    rejects = reduce(DataFrame.unionByName, reject_frames)
+    rejects.write.mode("append").json(lake.rejected("data_quality/json"))
+    if write_reject_csv:
+        (
+            rejects.coalesce(1)
+            .write.mode("append")
+            .option("header", True)
+            .csv(lake.rejected("data_quality/csv"))
+        )
+
+
+def _accept(
+    path: str, lake: LakeLayout, run_id: str, split: QualitySplit, archive: bool
+) -> IngestResult:
+    """Archive an ingested file under its lineage name (K6) and return its
+    ``ok`` result with the class counts (K5)."""
+    source_file = os.path.basename(path)
+    if archive:
+        move_file(path, lake.archive("validated"), lineage_name(source_file, run_id))
+    counts = dict(split.resolve_counts())
+    log.info("DATA QUALITY REPORT %s: %s", source_file, counts)
+    return IngestResult("ok", source_file, run_id, counts=counts, silver_path=lake.processed)
+
+
+def _discard(spark, silver, run_ids: list[str]) -> None:
+    """Roll back a failed write's partial silver append (K7) without masking
+    the write's own error."""
     try:
-        if keep_dates:
-            keep.repartition(
-                spark.sparkContext.defaultParallelism, "date"
-            ).write.mode("overwrite").partitionBy("date").parquet(lake.processed)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-    for d in set(dates) - keep_dates:
-        shutil.rmtree(os.path.join(lake.processed, f"date={d}"), ignore_errors=True)
-    log.warning("purged %d partial rows of failed run %s from silver", n_debris, run_id)
-    return n_debris
+        silver.discard_runs(spark, run_ids)
+    except Exception as discard_exc:  # keep the original error primary
+        log.error("silver rollback after failed ingest also failed: %s", discard_exc)
 
 
 def ingest_file(
@@ -125,85 +165,37 @@ def ingest_file(
     ingest_ts=None,
     archive: bool = True,
     write_reject_csv: bool = True,
-    commit_protocol: str = "direct",
+    commit_protocol: str | None = None,
 ) -> IngestResult:
     """Ingest one raw delimited file into the lake's silver zone.
 
-    ``commit_protocol="manifest"`` routes the silver append through
+    Silver keeps the commit protocol it already holds
+    (:func:`~retail_aws_etl_pipeline_spark.lake.open_table`);
+    ``commit_protocol`` chooses it for an empty zone and raises ValueError
+    when it disagrees with the zone. ``"manifest"`` commits through
     :class:`~retail_aws_etl_pipeline_spark.lake_manifest.ManifestedTable`:
     a crashed write publishes NOTHING (readers stay at the pre-write
-    snapshot) so the direct path's post-crash purge becomes a vacuum of
-    never-published staging files. Use the same protocol for compaction
-    (``compact_pending(commit_protocol="manifest")``) — readers of a
-    manifested zone must go through its snapshot, and the streaming file
-    source (streams.py) requires the direct layout.
+    snapshot). The streaming file source (streams.py) requires the direct
+    layout.
     """
-    if commit_protocol not in ("direct", "manifest"):
-        raise ValueError(f"commit_protocol must be direct|manifest, got {commit_protocol!r}")
+    silver = open_table(lake.processed, commit_protocol)
     run_id = ingest_run_id or new_run_id()
     source_file = os.path.basename(path)
 
     # -- 1. file-level gate -------------------------------------------------
-    file_errors = validate_file_head(path)
-    if file_errors:
-        reject_dir = lake.rejected("structural" if "empty_file" not in file_errors else "system")
-        os.makedirs(reject_dir, exist_ok=True)
-        dst = (
-            move_file(path, reject_dir, lineage_name(source_file, run_id))
-            if archive
-            else path
-        )
-        with open(os.path.join(reject_dir, f"{os.path.basename(dst)}_reason.json"), "w") as f:
-            json.dump({"file": source_file, "errors": file_errors}, f)
-        log.warning("file rejected %s: %s", source_file, file_errors)
-        return IngestResult("file_rejected", source_file, run_id, file_errors=file_errors)
+    rejected = _gate(path, lake, run_id, archive)
+    if rejected is not None:
+        return rejected
 
     # -- 2+3. parse + route + sinks; on ANY failure the input file is
-    # quarantined to rejected/system with a reason file and the error
-    # re-raised — the reference's K7 intent (glue_job_raw_to_processed.py:
-    # 421-443) with a working rollback: the session committer (v2) makes
-    # task output visible at task commit, so a failed job CAN leave
-    # partial rows in silver; since a quarantined file is never retried,
-    # those rows are purged by run id before the error propagates
-    # (purge_run_from_silver).
-    split: QualitySplit | None = None
+    # quarantined to rejected/system with a reason file, the run's partial
+    # silver append is rolled back (a quarantined file is never retried, so
+    # its rows must not reach gold) and the error re-raised — the
+    # reference's K7 intent (glue_job_raw_to_processed.py:421-443) with a
+    # working rollback.
     try:
-        extracted, meta = read_flexible_csv(spark, path)
-        split = split_quality(
-            extracted,
-            ingest_run_id=run_id,
-            source_file=source_file,
-            timestamp_patterns=timestamp_patterns,
-            ingest_ts=ingest_ts,
-        )
-        # repartition by the partition key first: otherwise every task holds
-        # rows of every date and a D-date file writes T×D small files
-        # (observed 32×550 on the bench); this way each date lands in one
-        # task → one file per date. The partition COUNT is explicit: with a
-        # bare repartition("date") AQE coalesces the small shuffle to a
-        # single task, which then creates every date directory serially
-        # (~16 ms each — measured 9 s for 550 dates); pinning N keeps the
-        # directory/file creation spread across the cluster.
-        #
-        # The silver write goes FIRST: it is the action that populates both
-        # caches and fires the embedded count Observations, so the class
-        # counts (and the reject-write decision below) cost zero extra jobs.
-        good_out = split.good.repartition(spark.sparkContext.defaultParallelism, "date")
-        if commit_protocol == "manifest":
-            from retail_aws_etl_pipeline_spark.lake_manifest import ManifestedTable
-
-            ManifestedTable(lake.processed, partition_col="date").append(good_out)
-        else:
-            good_out.write.mode("append").partitionBy("date").parquet(lake.processed)
-        if split.resolve_counts()["reject_rows"] > 0:
-            split.rejects.write.mode("append").json(lake.rejected("data_quality/json"))
-            if write_reject_csv:
-                (
-                    split.rejects.coalesce(1)
-                    .write.mode("append")
-                    .option("header", True)
-                    .csv(lake.rejected("data_quality/csv"))
-                )
+        split = _split(spark, path, run_id, timestamp_patterns, ingest_ts)
+        _write(spark, silver, lake, [split], write_reject_csv)
     except Exception as exc:
         reject_dir = lake.rejected("system")
         os.makedirs(reject_dir, exist_ok=True)
@@ -212,41 +204,12 @@ def ingest_file(
             move_file(path, reject_dir, dst_name)
         with open(os.path.join(reject_dir, f"{dst_name}_reason.json"), "w") as f:
             json.dump({"file": source_file, "error": str(exc)[:2000]}, f)
-        try:
-            if commit_protocol == "manifest":
-                # nothing was published — reclaim the crashed commit's
-                # debris: gc_manifests drops an unpointered version file if
-                # the crash hit between claim and pointer flip, then vacuum
-                # reclaims the now-unreferenced staging files (single-
-                # writer, so no in-flight peer commit can be swept)
-                from retail_aws_etl_pipeline_spark.lake_manifest import ManifestedTable
-
-                mt = ManifestedTable(lake.processed, partition_col="date")
-                mt.gc_manifests(keep_versions=None)  # debris only, keep history
-                # explicit 0: ingest is the table's single writer, so the
-                # young debris dir is provably our own crashed commit —
-                # the conservative default window would strand it for an hour
-                mt.vacuum(min_age_seconds=0)
-            else:
-                purge_run_from_silver(spark, lake, run_id)
-        except Exception as purge_exc:  # keep the original error primary
-            log.error("silver purge after failed ingest also failed: %s", purge_exc)
+        _discard(spark, silver, [run_id])
         log.error("ingest failed, file quarantined to rejected/system: %s", exc)
         raise
-    finally:
-        if split is not None and split.cached:
-            for df in split.cached:
-                df.unpersist()
 
     # -- 4. archive + summary ----------------------------------------------
-    if archive:
-        move_file(path, lake.archive("validated"), lineage_name(source_file, run_id))
-
-    summary = dict(split.counts)
-    log.info("DATA QUALITY REPORT %s: %s", source_file, summary)
-    return IngestResult(
-        "ok", source_file, run_id, counts=summary, silver_path=lake.processed
-    )
+    return _accept(path, lake, run_id, split, archive)
 
 
 def ingest_batch(
@@ -267,101 +230,39 @@ def ingest_batch(
     per-file job barriers (the reference's one-Glue-run-per-file shape).
     This also sidesteps the committer hazard of CONCURRENT appends to one
     parquet root (parallel ``ingest_file`` calls share ``_temporary``):
-    one job, one committer, full parallelism across files.
+    one job, one committer, full parallelism across files. Silver keeps
+    the commit protocol it already holds.
 
     Failure anywhere in the batch leaves the inputs in place and nothing
-    ledgered: rerun is at-least-once, and replayed rows collapse in gold's
-    keep-latest dedup. Files failing the head gate are quarantined
-    individually and do not poison the batch.
+    ledgered, and rolls back the batch's partial silver append, so a rerun
+    re-ingests every file exactly once. Files failing the head gate are
+    quarantined individually and do not poison the batch.
     """
+    silver = open_table(lake.processed)
     gate_results: dict[str, IngestResult] = {}
-    entries: list[tuple[str, str, str, QualitySplit]] = []
-    try:
-        for i, path in enumerate(paths):
-            source_file = os.path.basename(path)
-            run_id = new_run_id()
-            file_errors = validate_file_head(path)
-            if file_errors:
-                reject_dir = lake.rejected(
-                    "structural" if "empty_file" not in file_errors else "system"
-                )
-                os.makedirs(reject_dir, exist_ok=True)
-                dst = (
-                    move_file(path, reject_dir, lineage_name(source_file, run_id))
-                    if archive
-                    else path
-                )
-                with open(
-                    os.path.join(reject_dir, f"{os.path.basename(dst)}_reason.json"), "w"
-                ) as f:
-                    json.dump({"file": source_file, "errors": file_errors}, f)
-                gate_results[path] = IngestResult(
-                    "file_rejected", source_file, run_id, file_errors=file_errors
-                )
-                continue
-            extracted, _meta = read_flexible_csv(spark, path)
-            entries.append(
-                (
-                    path,
-                    source_file,
-                    run_id,
-                    split_quality(
-                        extracted,
-                        ingest_run_id=run_id,
-                        source_file=source_file,
-                        timestamp_patterns=timestamp_patterns,
-                        ingest_ts=ingest_ts,
-                        obs_prefix=f"b{i}_",
-                    ),
-                )
-            )
-
-        if entries:
-            good_all = entries[0][3].good
-            for _, _, _, s in entries[1:]:
-                good_all = good_all.unionByName(s.good)
-            good_all.repartition(
-                spark.sparkContext.defaultParallelism, "date"
-            ).write.mode("append").partitionBy("date").parquet(lake.processed)
-            reject_frames = [
-                s.rejects for _, _, _, s in entries if s.resolve_counts()["reject_rows"] > 0
-            ]
-            if reject_frames:
-                rej = reject_frames[0]
-                for r in reject_frames[1:]:
-                    rej = rej.unionByName(r)
-                rej.write.mode("append").json(lake.rejected("data_quality/json"))
-                if write_reject_csv:
-                    (
-                        rej.coalesce(1)
-                        .write.mode("append")
-                        .option("header", True)
-                        .csv(lake.rejected("data_quality/csv"))
-                    )
-    finally:
-        for _, _, _, s in entries:
-            for df in s.cached or []:
-                df.unpersist()
-
-    results: list[IngestResult] = []
-    by_path = {p: (sf, rid, s) for p, sf, rid, s in entries}
-    for path in paths:
-        if path in gate_results:
-            results.append(gate_results[path])
+    entries: dict[str, tuple[str, QualitySplit]] = {}
+    for i, path in enumerate(paths):
+        run_id = new_run_id()
+        rejected = _gate(path, lake, run_id, archive)
+        if rejected is not None:
+            gate_results[path] = rejected
             continue
-        source_file, run_id, split = by_path[path]
-        if archive:
-            move_file(path, lake.archive("validated"), lineage_name(source_file, run_id))
-        results.append(
-            IngestResult(
-                "ok",
-                source_file,
-                run_id,
-                counts=dict(split.resolve_counts()),
-                silver_path=lake.processed,
-            )
+        entries[path] = (
+            run_id,
+            _split(spark, path, run_id, timestamp_patterns, ingest_ts, obs_prefix=f"b{i}_"),
         )
-    return results
+
+    if entries:
+        try:
+            _write(spark, silver, lake, [s for _, s in entries.values()], write_reject_csv)
+        except Exception:
+            _discard(spark, silver, [run_id for run_id, _ in entries.values()])
+            raise
+
+    return [
+        gate_results[path] if path in gate_results else _accept(path, lake, *entries[path], archive)
+        for path in paths
+    ]
 
 
 def ingest_pending(

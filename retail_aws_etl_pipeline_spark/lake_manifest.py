@@ -1,9 +1,10 @@
 """Object-store-safe table commits: manifest protocol for silver/gold.
 
-The rename-based commit in :mod:`retail_aws_etl_pipeline_spark.lake` is
-atomic on local FS/HDFS but NOT on object stores — S3 "rename" is copy +
-delete, and the classic file-output committers can expose partial output
-(reference intent K7, glue_job_raw_to_processed.py:421-443; ROADMAP #3).
+The direct table of :mod:`retail_aws_etl_pipeline_spark.lake` commits
+through Spark's rename-based committer, atomic on local FS/HDFS but NOT on
+object stores — S3 "rename" is copy + delete, and the classic file-output
+committers can expose partial output (reference intent K7,
+glue_job_raw_to_processed.py:421-443; ROADMAP #3).
 This module implements the standard open-table answer (the same core
 protocol as Delta/Iceberg commit logs, re-expressed minimally):
 
@@ -257,6 +258,21 @@ class ManifestedTable:
             lambda snap: [f for f in snap["files"] if f["partition"] not in replaced]
             + entries
         )
+
+    def discard_runs(self, spark: SparkSession, run_ids: list[str]) -> int:
+        """Reclaim the debris of a failed write: :meth:`gc_manifests` drops
+        an unpointered version file if the crash hit between claim and
+        pointer flip, then :meth:`vacuum` reclaims the unreferenced staging
+        files; every retained history snapshot is kept. A crashed commit
+        published nothing, so no visible row is removed (returns 0); rows of
+        ``run_ids`` that a completed commit already published stay. The
+        explicit ``min_age_seconds=0`` assumes the caller is the table's
+        single writer, so a young unreferenced commit dir is its own crashed
+        commit, not a peer's in-flight one — the conservative default window
+        would strand it for an hour."""
+        self.gc_manifests(keep_versions=None)
+        self.vacuum(min_age_seconds=0)
+        return 0
 
     # -- maintenance -------------------------------------------------------
 

@@ -33,7 +33,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,9 +41,7 @@ from pyspark.sql import functions as F
 
 from retail_aws_etl_pipeline_spark.functions.hashing import business_row_hash
 from retail_aws_etl_pipeline_spark.functions.numeric import clean_currency, clean_quantity
-from retail_aws_etl_pipeline_spark.lake import LakeLayout
-
-DATE_PARTITION_RE = re.compile(r"date=(\d{4}-\d{2}-\d{2})$")
+from retail_aws_etl_pipeline_spark.lake import LakeLayout, open_table
 
 #: Columns the gold job defensively expects from silver
 #: (incremental_auto_compaction.py:188-202).
@@ -66,19 +63,6 @@ EXPECTED_SILVER_COLUMNS = [
     "source_file",
     "ingest_ts",
 ]
-
-
-def list_date_partitions(path: str) -> list[str]:
-    """Sorted date partition values under a hive-layout directory (S6, fixed)."""
-    if not os.path.isdir(path):
-        return []
-    out = []
-    for name in os.listdir(path):
-        m = DATE_PARTITION_RE.search(name)
-        if m and os.path.isdir(os.path.join(path, name)):
-            out.append(m.group(1))
-    return sorted(out)
-
 
 def select_work(
     processed_dates: list[str],
@@ -105,15 +89,17 @@ def compact_pending(
     process_all: bool = False,
     max_partitions: int = 10,
     write_audit: bool = True,
-    merge_schema: bool = False,
-    commit_protocol: str = "direct",
+    commit_protocol: str | None = None,
     chunk_size: int | None = None,
 ) -> dict:
     """Compact all pending silver partitions into gold.
 
-    ``commit_protocol``: ``"direct"`` (default) writes gold via dynamic
-    partition overwrite — atomic enough on local FS/HDFS where rename is
-    atomic; ``"manifest"`` commits through
+    Silver is read under whichever commit protocol it holds; gold keeps the
+    protocol it already holds (:func:`~retail_aws_etl_pipeline_spark.lake.open_table`).
+    ``commit_protocol`` chooses gold's protocol when gold is empty and
+    raises ValueError when it disagrees with gold: ``"direct"`` writes gold
+    via dynamic partition overwrite — atomic enough on local FS/HDFS where
+    rename is atomic; ``"manifest"`` commits through
     :class:`~retail_aws_etl_pipeline_spark.lake_manifest.ManifestedTable` —
     the object-store-safe path where a crash at ANY point leaves gold
     readable at the pre-write snapshot (visibility is one atomic pointer
@@ -133,65 +119,25 @@ def compact_pending(
     each chunk adds ~2-3 s of fixed plan/job overhead — chunking is a
     recovery-granularity knob, not a throughput one.
     """
-    # Runtime-settable; (re)apply in case the session was built elsewhere —
-    # without it, overwrite would drop ALL existing gold partitions.
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-    manifest_table = None
-    if commit_protocol == "manifest":
-        from retail_aws_etl_pipeline_spark.lake_manifest import ManifestedTable
-
-        manifest_table = ManifestedTable(lake.gold, partition_col="date")
-    elif commit_protocol != "direct":
-        raise ValueError(f"commit_protocol must be direct|manifest, got {commit_protocol!r}")
-
-    processed_dates = silver_partitions(lake)
-    gold_dates = (
-        manifest_table.partitions() if manifest_table else list_date_partitions(lake.gold)
+    silver = open_table(lake.processed)
+    gold = open_table(lake.gold, commit_protocol)
+    work = select_work(
+        silver.partitions(), gold.partitions(), force_dates, process_all, max_partitions
     )
-    work = select_work(processed_dates, gold_dates, force_dates, process_all, max_partitions)
     run_ts = datetime.now(timezone.utc).strftime("%Y-%m-%dT%H:%M:%SZ")
 
-    if not work:
-        summary = {
-            "job_name": "gold_compaction",
-            "run_ts_utc": run_ts,
-            "processed_partitions_count": 0,
-            "results": [],
-        }
-        if write_audit:
-            _write_summary(lake, summary)
-        return summary
-
-    if chunk_size is not None and chunk_size < len(work):
-        results = []
-        n_chunks = 0
-        for at in range(0, len(work), chunk_size):
-            results.extend(
-                _compact_dates(
-                    spark, lake, work[at : at + chunk_size], run_ts,
-                    write_audit, merge_schema, manifest_table,
-                )
-            )
-            n_chunks += 1
-        summary = {
-            "job_name": "gold_compaction",
-            "run_ts_utc": run_ts,
-            "processed_partitions_count": len(results),
-            "chunks": n_chunks,
-            "results": results,
-        }
-        if write_audit:
-            _write_summary(lake, summary)
-        return summary
-
-    results = _compact_dates(
-        spark, lake, work, run_ts, write_audit, merge_schema, manifest_table
-    )
+    step = chunk_size or max(len(work), 1)
+    chunks = [work[at : at + step] for at in range(0, len(work), step)]
+    results = [
+        metrics
+        for chunk in chunks
+        for metrics in _compact_dates(spark, lake, silver, gold, chunk, run_ts, write_audit)
+    ]
     summary = {
         "job_name": "gold_compaction",
         "run_ts_utc": run_ts,
         "processed_partitions_count": len(results),
+        "chunks": len(chunks),
         "results": results,
     }
     if write_audit:
@@ -199,63 +145,72 @@ def compact_pending(
     return summary
 
 
-def _compact_dates(
-    spark: SparkSession,
-    lake: LakeLayout,
-    work: list[str],
-    run_ts: str,
-    write_audit: bool,
-    merge_schema: bool,
-    manifest_table,
-) -> list[dict]:
-    """One chunk: read+clean+window+write+audit for exactly ``work`` dates."""
-    from retail_aws_etl_pipeline_spark.lake_manifest import ManifestedTable
-
-    silver_table = ManifestedTable(lake.processed, partition_col="date")
-    if silver_table.exists():
-        # manifested silver: the snapshot IS the listing
-        silver = silver_table.read(spark).filter(F.col("date").isin(work))
-    else:
-        # One listing of the table root + partition-pruned filter — NOT one
-        # read per date directory (500 explicit paths = 500 listings + plan
-        # bloat). mergeSchema stays opt-in: the padding loop below covers
-        # drift, and merging footers across every partition is a
-        # driver-side tax.
-        reader = spark.read.option("basePath", lake.processed)
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        silver = reader.parquet(lake.processed).filter(F.col("date").isin(work))
-
-    # Defensive padding for schema drift across ingest runs (P15).
+def _prepare(silver: DataFrame) -> DataFrame:
+    """Silver rows ready for the keep-latest window: schema-drift padding
+    (P15 — in place of mergeSchema, whose footer merge across every
+    partition is a driver-side tax), numerics re-cleaned defensively
+    (incremental_auto_compaction.py:205-207), the business ``row_hash`` and
+    the window's ``ingest_ts_f``."""
     for c in EXPECTED_SILVER_COLUMNS:
         if c not in silver.columns:
             silver = silver.withColumn(c, F.lit(None).cast("string"))
-
-    prepared = (
+    return (
         silver.withColumn("quantity", clean_quantity("quantity", "long"))
         .withColumn("unit_price", clean_currency("unit_price"))
         .withColumn("revenue", clean_currency("revenue"))
         .withColumn("row_hash", business_row_hash())
-        .withColumn(
-            "ingest_ts_f",
-            F.coalesce(F.col("ingest_ts").try_cast("timestamp"), F.current_timestamp()),
-        )
+        .withColumn("ingest_ts_f", _ingest_ts_f())
     )
+
+
+def _ingest_ts_f():
+    return F.coalesce(F.col("ingest_ts").try_cast("timestamp"), F.current_timestamp())
+
+
+def _rank_latest(spark: SparkSession, rows: DataFrame) -> DataFrame:
+    """``rows`` with ``rn``: 1 marks the survivor of each (date,
+    transaction_id) — the newest ``ingest_ts_f``, ``row_hash`` DESC as the
+    deterministic tiebreaker. The explicit shuffle by the window keys is
+    the only one the window needs."""
+    w = W.partitionBy("date", "transaction_id").orderBy(
+        F.desc("ingest_ts_f"), F.desc("row_hash")
+    )
+    return rows.repartition(
+        spark.sparkContext.defaultParallelism, F.col("date"), F.col("transaction_id")
+    ).withColumn("rn", F.row_number().over(w))
+
+
+def _write_gold(spark: SparkSession, gold, ranked: DataFrame) -> None:
+    """Overwrite the gold partitions ``ranked`` touches with its survivors.
+
+    A second small shuffle post-dedup: each date lands whole in one task
+    (→ one file per date), clustered by transaction_id for scan locality.
+    Explicit N so AQE can't funnel every date's directory creation through
+    a single task (see ingest.py)."""
+    survivors = ranked.filter(F.col("rn") == 1).drop("rn", "ingest_ts_f")
+    gold.overwrite_partitions(
+        survivors.repartition(spark.sparkContext.defaultParallelism, F.col("date"))
+        .sortWithinPartitions("date", "transaction_id")
+    )
+
+
+def _compact_dates(
+    spark: SparkSession,
+    lake: LakeLayout,
+    silver,
+    gold,
+    work: list[str],
+    run_ts: str,
+    write_audit: bool,
+) -> list[dict]:
+    """One chunk: read+clean+window+write+audit for exactly ``work`` dates."""
+    rows = _prepare(silver.read(spark).filter(F.col("date").isin(work)))
 
     # One shuffle serves both the dedup window and the stats; the windowed
     # frame is cached so the audit aggregation and the gold write each run
     # the read+clean+window lineage exactly once (the reference re-ran
     # filter().count() chains per partition).
-    w = W.partitionBy("date", "transaction_id").orderBy(
-        F.desc("ingest_ts_f"), F.desc("row_hash")
-    )
-    windowed = (
-        prepared.repartition(
-            spark.sparkContext.defaultParallelism, F.col("date"), F.col("transaction_id")
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .persist()
-    )
+    windowed = _rank_latest(spark, rows).persist()
 
     # Pre- AND post-dedup audit stats in ONE pass: rn==1 marks survivors.
     stats_rows = (
@@ -277,28 +232,13 @@ def _compact_dates(
         )
         .collect()
     )
-    pre_stats = stats_rows
-    post_stats = {r["date"]: r["rows_after_dedup"] for r in stats_rows}
-
-    deduped = windowed.filter(F.col("rn") == 1).drop("rn", "ingest_ts_f")
-
-    # second small shuffle post-dedup: each date lands whole in one task
-    # (→ one file per date), clustered by transaction_id for scan
-    # locality. Explicit N so AQE can't funnel every date's directory
-    # creation through a single task (see ingest.py).
-    out = deduped.repartition(
-        spark.sparkContext.defaultParallelism, F.col("date")
-    ).sortWithinPartitions("date", "transaction_id")
-    if manifest_table is not None:
-        manifest_table.overwrite_partitions(out)
-    else:
-        out.write.mode("overwrite").partitionBy("date").parquet(lake.gold)
+    _write_gold(spark, gold, windowed)
     windowed.unpersist()
 
     results = []
-    for row in sorted(pre_stats, key=lambda r: str(r["date"])):
+    for row in sorted(stats_rows, key=lambda r: str(r["date"])):
         d = str(row["date"])
-        after = post_stats.get(row["date"], 0)
+        after = row["rows_after_dedup"]
         metrics = {
             "target_date": d,
             "input_partition": os.path.join(lake.processed, f"date={d}"),
@@ -326,37 +266,16 @@ def _write_summary(lake: LakeLayout, summary: dict) -> None:
         json.dump(summary, f, indent=2)
 
 
-def silver_partitions(lake: LakeLayout) -> list[str]:
-    """Silver date partitions, whichever commit protocol wrote them."""
-    from retail_aws_etl_pipeline_spark.lake_manifest import ManifestedTable
-
-    table = ManifestedTable(lake.processed, partition_col="date")
-    if table.exists():
-        return table.partitions()
-    return list_date_partitions(lake.processed)
-
-
 def read_silver(spark: SparkSession, lake: LakeLayout) -> DataFrame:
-    """Silver as a DataFrame: manifested snapshot if present, else the
-    parquet directory."""
-    from retail_aws_etl_pipeline_spark.lake_manifest import ManifestedTable
-
-    table = ManifestedTable(lake.processed, partition_col="date")
-    if table.exists():
-        return table.read(spark)
-    return spark.read.parquet(lake.processed)
+    """Silver as a DataFrame, whichever commit protocol wrote it."""
+    return open_table(lake.processed).read(spark)
 
 
 def read_gold(spark: SparkSession, lake: LakeLayout) -> DataFrame:
     """Gold as a DataFrame, whichever commit protocol produced it: a
     manifested table is read through its snapshot (never by listing), a
     direct-layout table by the parquet directory."""
-    from retail_aws_etl_pipeline_spark.lake_manifest import ManifestedTable
-
-    table = ManifestedTable(lake.gold, partition_col="date")
-    if table.exists():
-        return table.read(spark)
-    return spark.read.parquet(lake.gold)
+    return open_table(lake.gold).read(spark)
 
 
 def register_gold_view(spark: SparkSession, lake: LakeLayout, name: str = "fact_sales") -> DataFrame:
@@ -369,53 +288,26 @@ def register_gold_view(spark: SparkSession, lake: LakeLayout, name: str = "fact_
 
 def upsert_gold(spark: SparkSession, lake: LakeLayout, batch_df: DataFrame) -> None:
     """Merge a batch of silver-shaped rows into gold, keep-latest by
-    (date, transaction_id).
+    (date, transaction_id), under whichever commit protocol gold holds.
 
     The foreachBatch body for streaming gold maintenance (SURVEY.md §2.9:
     at-least-once reprocess + idempotent overwrite → foreachBatch + dynamic
     partition overwrite): union the batch with the existing rows of ONLY
     the touched date partitions, re-run the keep-latest window, and
-    dynamically overwrite just those partitions. Re-delivered batches are
-    absorbed by the dedup — the sink is idempotent.
+    overwrite just those partitions. Re-delivered batches are absorbed by
+    the dedup — the sink is idempotent. Existing gold rows are already
+    clean and carry their ``row_hash``; only the window's ``ingest_ts_f``
+    is derived for them.
     """
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-    prepared = (
-        batch_df.withColumn("quantity", clean_quantity("quantity", "long"))
-        .withColumn("unit_price", clean_currency("unit_price"))
-        .withColumn("revenue", clean_currency("revenue"))
-        .withColumn("row_hash", business_row_hash())
-        .withColumn(
-            "ingest_ts_f",
-            F.coalesce(F.col("ingest_ts").try_cast("timestamp"), F.current_timestamp()),
-        )
-    )
-    touched = [str(r["date"]) for r in prepared.select("date").distinct().collect()]
-    existing_dates = [d for d in touched if d in set(list_date_partitions(lake.gold))]
+    gold = open_table(lake.gold)
+    rows = _prepare(batch_df)
+    touched = [str(r["date"]) for r in rows.select("date").distinct().collect()]
+    existing_dates = [d for d in touched if d in set(gold.partitions())]
     if existing_dates:
         existing = (
-            spark.read.option("basePath", lake.gold)
-            .parquet(lake.gold)
+            gold.read(spark)
             .filter(F.col("date").isin(existing_dates))
-            .withColumn(
-                "ingest_ts_f",
-                F.coalesce(F.col("ingest_ts").try_cast("timestamp"), F.current_timestamp()),
-            )
+            .withColumn("ingest_ts_f", _ingest_ts_f())
         )
-        prepared = prepared.unionByName(existing, allowMissingColumns=True)
-
-    w = W.partitionBy("date", "transaction_id").orderBy(
-        F.desc("ingest_ts_f"), F.desc("row_hash")
-    )
-    deduped = (
-        prepared.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn", "ingest_ts_f")
-    )
-    (
-        deduped.repartition(spark.sparkContext.defaultParallelism, F.col("date"))
-        .sortWithinPartitions("date", "transaction_id")
-        .write.mode("overwrite")
-        .partitionBy("date")
-        .parquet(lake.gold)
-    )
+        rows = rows.unionByName(existing, allowMissingColumns=True)
+    _write_gold(spark, gold, _rank_latest(spark, rows))

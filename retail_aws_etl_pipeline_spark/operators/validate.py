@@ -61,7 +61,6 @@ class QualitySplit:
     good: DataFrame  # silver-shaped rows (pre-write)
     rejects: DataFrame  # fixed 13-column reject frame, all three classes
     counts: dict = field(default_factory=dict)  # resolved class counts
-    cached: list[DataFrame] | None = None  # persisted lineages; caller unpersists
     _resolve: Callable[[], dict] | None = None
 
     def resolve_counts(self) -> dict:
@@ -152,15 +151,15 @@ def split_quality(
     # Total/structural/timestamp class counts ride the first action as an
     # Observation (inside the cached plan, so they are computed exactly once
     # — at cache population) instead of a dedicated aggregation job.
-    obs_parse = Observation(f"{obs_prefix}parse_counts")
-    parsed = parsed.observe(
-        obs_parse,
+    parse_exprs = [
         F.count(F.lit(1)).alias("total"),
         F.sum(F.when(struct_cond, 1).otherwise(0)).alias("structural"),
         F.sum(
             F.when(~struct_cond & F.col("timestamp_parsed").isNull(), 1).otherwise(0)
         ).alias("invalid_timestamp"),
-    )
+    ]
+    obs_parse = Observation(f"{obs_prefix}parse_counts")
+    parsed = parsed.observe(obs_parse, *parse_exprs)
 
     # The parse lineage is deliberately NOT cached: its only consumers
     # besides the good path are the early-reject branches and the count
@@ -215,12 +214,12 @@ def split_quality(
     # saving (no serialization pass over the full deduped frame on every
     # ingest) wins on the common case. Identical rows make the re-run
     # deterministic — any kept duplicate is byte-equal.
-    obs_dedup = Observation(f"{obs_prefix}dedup_counts")
-    deduped = cleaned.dropDuplicates().observe(
-        obs_dedup,
+    dedup_exprs = [
         F.count(F.lit(1)).alias("after_dedup"),
         F.sum(F.when(dq_cond, 1).otherwise(0)).alias("business"),
-    )
+    ]
+    obs_dedup = Observation(f"{obs_prefix}dedup_counts")
+    deduped = cleaned.dropDuplicates().observe(obs_dedup, *dedup_exprs)
 
     dq_rejects = (
         deduped.filter(dq_cond)
@@ -238,25 +237,8 @@ def split_quality(
     # action (normally the caller's silver write). ``resolve_counts`` just
     # reads them back and derives the report dict.
     def _resolve() -> dict:
-        base = observed_or_aggregated(
-            obs_parse,
-            parsed,
-            [
-                F.count(F.lit(1)).alias("total"),
-                F.sum(F.when(struct_cond, 1).otherwise(0)).alias("structural"),
-                F.sum(
-                    F.when(~struct_cond & F.col("timestamp_parsed").isNull(), 1).otherwise(0)
-                ).alias("invalid_timestamp"),
-            ],
-        )
-        after = observed_or_aggregated(
-            obs_dedup,
-            deduped,
-            [
-                F.count(F.lit(1)).alias("after_dedup"),
-                F.sum(F.when(dq_cond, 1).otherwise(0)).alias("business"),
-            ],
-        )
+        base = observed_or_aggregated(obs_parse, parsed, parse_exprs)
+        after = observed_or_aggregated(obs_dedup, deduped, dedup_exprs)
         # SUM over an empty frame aggregates to NULL (a header-only file
         # passes the head gate but parses to zero data rows) — treat as 0.
         structural = base["structural"] or 0
@@ -277,6 +259,4 @@ def split_quality(
         )
         return counts
 
-    return QualitySplit(
-        good=good, rejects=rejects, cached=[], _resolve=_resolve
-    )
+    return QualitySplit(good=good, rejects=rejects, _resolve=_resolve)

@@ -299,13 +299,15 @@ def gold_upsert_stream(
     converges to the same gold (soak-tested across rates in
     ``tests/test_streaming_multimodal.py::test_gold_upsert_stream_soak``).
     """
+    from retail_aws_etl_pipeline_spark.lake import open_table
     from retail_aws_etl_pipeline_spark.operators.compact import upsert_gold
     from retail_aws_etl_pipeline_spark.schema import SILVER_SCHEMA
 
-    # NOTE: the streaming file source discovers work by DIRECTORY listing —
-    # it requires the direct silver layout. A lake ingesting with
-    # commit_protocol="manifest" should drive gold via compact_pending
-    # (manifest) instead of this stream.
+    # NOTE: the streaming file source discovers work by DIRECTORY listing,
+    # so silver must hold the direct layout (open_table raises ValueError on
+    # a manifested silver; such a lake drives gold with compact_pending).
+    # Gold may hold either protocol: upsert_gold writes through its table.
+    open_table(lake.processed, "direct")
     reader = spark.readStream.schema(SILVER_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)

@@ -19,22 +19,7 @@ from pyspark.sql import functions as F
 from retail_aws_etl_pipeline_spark.ingest import ingest_file, ingest_pending
 from retail_aws_etl_pipeline_spark.lake import LakeLayout
 from retail_aws_etl_pipeline_spark.operators.compact import compact_pending
-
-HEADER = "transaction_id,store_id,timestamp,item_id,quantity,unit_price,revenue"
-
-
-def _rows(ids):
-    # 3 distinct dates, valid DQ (revenue == qty * price)
-    return [
-        f"T{i:04d},S{i % 3},2025-07-{10 + i % 3:02d} 10:0{i % 6}:00,ITEM{i},2,5.00,10.00"
-        for i in ids
-    ]
-
-
-def _write_csv(path, ids):
-    with open(path, "w") as f:
-        f.write(HEADER + "\n")
-        f.write("\n".join(_rows(ids)) + "\n")
+from tests.conftest import write_sales_csv as _write_csv
 
 
 def test_crash_midwrite_then_reingest_converges(spark, tmp_path):
@@ -138,15 +123,6 @@ def test_recompaction_after_late_reingest_is_idempotent(spark, tmp_path):
     assert gold.select("transaction_id").distinct().count() == 10
 
 
-def _write_csv_with_rejects(path, good_ids, n_bad=2):
-    with open(path, "w") as f:
-        f.write(HEADER + "\n")
-        f.write("\n".join(_rows(good_ids)) + "\n")
-        for i in range(n_bad):
-            # revenue != qty * price → data-quality reject
-            f.write(f"TBAD{i:02d},S0,2025-07-10 10:00:00,ITEMX{i},2,5.00,99.99\n")
-
-
 def test_quarantined_run_leaves_no_partial_silver_rows(spark, tmp_path):
     """ADVICE r1: committer v2 commits task output at TASK commit, so a job
     that fails after the silver append leaves that run's rows behind while
@@ -176,7 +152,7 @@ def test_quarantined_run_leaves_no_partial_silver_rows(spark, tmp_path):
     (reject_parent / "data_quality").write_text("not a directory")
 
     doomed = tmp_path / "doomed.csv"
-    _write_csv_with_rejects(doomed, range(100, 110))
+    _write_csv(doomed, range(100, 110), n_bad=2)
     with pytest.raises(Exception):
         ingest_file(
             spark, str(doomed), lake,
@@ -200,7 +176,7 @@ def test_quarantined_run_leaves_no_partial_silver_rows(spark, tmp_path):
 def test_purge_deletes_now_empty_partitions(spark, tmp_path):
     """Dates populated ONLY by the failed run must disappear from silver
     entirely (dynamic overwrite can't rewrite a partition to empty)."""
-    from retail_aws_etl_pipeline_spark.ingest import purge_run_from_silver
+    from retail_aws_etl_pipeline_spark.lake import DirectTable
 
     lake = LakeLayout(str(tmp_path / "lake"))
     csv = tmp_path / "solo.csv"
@@ -212,10 +188,121 @@ def test_purge_deletes_now_empty_partitions(spark, tmp_path):
         archive=False, write_reject_csv=False,
     )
     assert spark.read.parquet(lake.processed).count() == 6
-    purged = purge_run_from_silver(spark, lake, "run_solo")
+    purged = DirectTable(lake.processed).discard_runs(spark, ["run_solo"])
     assert purged == 6
     date_dirs = [d for d in os.listdir(lake.processed) if d.startswith("date=")]
     assert date_dirs == []
+
+
+def test_failed_batch_discards_its_partial_silver_rows(spark, tmp_path):
+    """ingest_pending(batch_size=2) with the reject sink sabotaged: the
+    batch's silver append has committed when the reject write fails, so
+    the failure handler must discard every run of the batch — inputs stay
+    in place, nothing is ledgered, and the retry after repair ingests each
+    file exactly once (raw = silver + rejects)."""
+    import pytest
+
+    lake = LakeLayout(str(tmp_path / "lake"))
+    ok_csv = tmp_path / "ok.csv"
+    _write_csv(ok_csv, range(10))
+    ingest_file(spark, str(ok_csv), lake, ingest_run_id="run_ok",
+                archive=False, write_reject_csv=False)
+
+    reject_parent = tmp_path / "lake" / "rejected"
+    reject_parent.mkdir(parents=True, exist_ok=True)
+    (reject_parent / "data_quality").write_text("not a directory")
+
+    incoming = tmp_path / "incoming"
+    incoming.mkdir()
+    _write_csv(incoming / "a.csv", range(100, 110), n_bad=2)
+    _write_csv(incoming / "b.csv", range(200, 210), n_bad=2)
+    ledger = str(tmp_path / "ledger.jsonl")
+    with pytest.raises(Exception):
+        ingest_pending(spark, str(incoming), lake, ledger_path=ledger, batch_size=2,
+                       write_reject_csv=False)
+
+    silver = spark.read.parquet(lake.processed)
+    assert silver.filter(F.col("ingest_run_id") != "run_ok").count() == 0
+    assert silver.count() == 10
+    assert sorted(os.listdir(incoming)) == ["a.csv", "b.csv"]
+    assert not os.path.exists(ledger)
+
+    (reject_parent / "data_quality").unlink()
+    results = ingest_pending(spark, str(incoming), lake, ledger_path=ledger, batch_size=2,
+                             write_reject_csv=False)
+    assert [r.counts["good_rows"] for r in results] == [10, 10]
+    assert spark.read.parquet(lake.processed).count() == 30
+    assert spark.read.json(lake.rejected("data_quality/json")).count() == 4
+
+
+def _write_dirty_csv(path, ids, delimiter=","):
+    """Valid rows plus one of each row-level defect: a short row
+    (structural), an unparseable timestamp, an exact duplicate line, a
+    revenue mismatch and a non-numeric quantity (business)."""
+    d = delimiter
+    rows = [
+        f"T{i:04d}{d}S1{d}2025-07-{10 + i % 3:02d} 10:00:00{d}ITEM{i}{d}2{d}$5.00{d}$10.00"
+        for i in ids
+    ]
+    rows += [
+        f"TS{ids[0]:04d}{d}S1{d}2025-07-10 10:00:00",
+        f"TT{ids[0]:04d}{d}S1{d}not a time{d}ITEM1{d}2{d}5.00{d}10.00",
+        rows[0],
+        f"TB{ids[0]:04d}{d}S1{d}2025-07-11 10:00:00{d}ITEM1{d}2{d}5.00{d}99.99",
+        f"TQ{ids[0]:04d}{d}S1{d}2025-07-12 10:00:00{d}ITEM1{d}N/A{d}5.00{d}10.00",
+    ]
+    header = d.join(["txn_id", "store_id", "timestamp", "product_id", "qty", "price", "amount"])
+    with open(path, "w") as f:
+        f.write(header + "\n" + "\n".join(rows) + "\n")
+
+
+def test_ingest_batch_counts_match_ingest_file(spark, tmp_path):
+    """Per-file counts of ingest_batch equal those of ingest_file on
+    synthetic dirty files (including a head-gate reject), in a direct zone
+    and in a zone already manifested by one ingest_file; the batch follows
+    the zone's protocol."""
+    from retail_aws_etl_pipeline_spark.ingest import ingest_batch
+    from retail_aws_etl_pipeline_spark.lake_manifest import ManifestedTable
+    from retail_aws_etl_pipeline_spark.operators.compact import read_silver
+
+    def inputs(tag):
+        d = tmp_path / tag
+        d.mkdir()
+        _write_dirty_csv(d / "a.csv", range(0, 8))
+        _write_dirty_csv(d / "b.csv", range(8, 20), delimiter=";")
+        _write_dirty_csv(d / "c.csv", range(20, 23), delimiter="|")
+        (d / "gate.csv").write_text("a,b,c\n1,2,3\n")
+        return [str(d / n) for n in ("a.csv", "b.csv", "c.csv", "gate.csv")]
+
+    single = LakeLayout(str(tmp_path / "single"))
+    want = {}
+    for p in inputs("single_in"):
+        r = ingest_file(spark, p, single, archive=False, write_reject_csv=False)
+        want[r.source_file] = (r.status, r.counts, r.file_errors)
+    assert want["a.csv"][1]["structural_rejects"] == 1
+    assert want["a.csv"][1]["timestamp_rejects"] == 1
+    assert want["a.csv"][1]["duplicates_removed"] == 1
+    assert want["a.csv"][1]["business_rejects"] == 2
+    assert want["gate.csv"][0] == "file_rejected"
+
+    for protocol in ("direct", "manifest"):
+        lake = LakeLayout(str(tmp_path / protocol))
+        seed = tmp_path / f"seed_{protocol}.csv"
+        _write_csv(seed, range(900, 905))
+        ingest_file(spark, str(seed), lake, archive=False, write_reject_csv=False,
+                    commit_protocol=protocol)
+        results = ingest_batch(spark, inputs(f"{protocol}_in"), lake, archive=False,
+                               write_reject_csv=False)
+        got = {r.source_file: (r.status, r.counts, r.file_errors) for r in results}
+        assert got == want, protocol
+        good = sum(c["good_rows"] for status, c, _ in want.values() if status == "ok")
+        assert read_silver(spark, lake).count() == 5 + good
+        root_dates = [n for n in os.listdir(lake.processed) if n.startswith("date=")]
+        if protocol == "manifest":
+            assert ManifestedTable(lake.processed).snapshot()["version"] == 2
+            assert root_dates == []
+        else:
+            assert root_dates
 
 
 # ---------------------------------------------------------------------------
@@ -298,23 +385,20 @@ def test_manifest_overwrite_partitions_semantics(spark, tmp_path):
 
 
 def test_manifest_silver_ingest_end_to_end(spark, tmp_path):
-    """commit_protocol='manifest' through the WHOLE pipeline: reference CSV
-    → manifested silver (same class counts as the direct path) → manifested
-    gold; views serve both zones from snapshots."""
-    import shutil
-
+    """commit_protocol='manifest' through the WHOLE pipeline: a sales CSV
+    with rejects → manifested silver (same class counts as the direct path)
+    → manifested gold; views serve both zones from snapshots."""
     from retail_aws_etl_pipeline_spark.lake_manifest import ManifestedTable
     from retail_aws_etl_pipeline_spark.operators.compact import read_gold, read_silver
     from retail_aws_etl_pipeline_spark.plans.views import register_lake_views
 
-    src = "/root/reference/sample_csv_files/sales_2024-10-16.csv"
     f = tmp_path / "sales.csv"
-    shutil.copy(src, f)
+    _write_csv(f, range(30), n_bad=2)
     lake = LakeLayout(str(tmp_path / "lake"))
     direct_lake = LakeLayout(str(tmp_path / "lake_direct"))
 
     f2 = tmp_path / "sales_direct.csv"
-    shutil.copy(src, f2)
+    _write_csv(f2, range(30), n_bad=2)
     direct = ingest_file(spark, str(f2), direct_lake, archive=False, write_reject_csv=False)
     result = ingest_file(
         spark, str(f), lake, archive=False, write_reject_csv=False,
@@ -580,6 +664,69 @@ def test_compact_pending_manifest_protocol_end_to_end(spark, tmp_path):
     gold = read_gold(spark, lake)
     assert gold.count() == 10
     assert gold.select("transaction_id").distinct().count() == 10
+
+
+def test_gold_upsert_follows_a_manifested_gold_zone(spark, tmp_path):
+    """Direct silver, gold compacted with commit_protocol='manifest', then a
+    second file (10 new ids, 10 quantity corrections) drained by
+    gold_upsert_stream: the upsert must commit through gold's manifest, so
+    read_gold sees all 40 keys and the 20 rows of the second file; a
+    compaction asking for the direct protocol on that gold is refused."""
+    import pytest
+
+    from retail_aws_etl_pipeline_spark.operators.compact import read_gold
+    from retail_aws_etl_pipeline_spark.streaming.streams import gold_upsert_stream
+
+    lake = LakeLayout(str(tmp_path / "lake"))
+    first, second = tmp_path / "first.csv", tmp_path / "second.csv"
+    _write_csv(first, range(30))
+    _write_csv(second, range(20, 40), quantity=3)
+    ingest_file(spark, str(first), lake, archive=False, write_reject_csv=False,
+                ingest_ts=F.lit("2025-07-20 00:00:00").cast("timestamp"))
+    compact_pending(spark, lake, max_partitions=100, write_audit=False,
+                    commit_protocol="manifest")
+    assert read_gold(spark, lake).count() == 30
+
+    ingest_file(spark, str(second), lake, archive=False, write_reject_csv=False,
+                ingest_ts=F.lit("2025-07-21 00:00:00").cast("timestamp"))
+    gold_upsert_stream(spark, lake, str(tmp_path / "ck")).awaitTermination()
+
+    gold = read_gold(spark, lake)
+    assert gold.count() == 40
+    assert gold.filter(F.col("quantity") == 3).count() == 20
+    assert not [d for d in os.listdir(lake.gold) if d.startswith("date=")]
+
+    with pytest.raises(ValueError, match="manifest"):
+        compact_pending(spark, lake, process_all=True, write_audit=False,
+                        commit_protocol="direct")
+    assert not [d for d in os.listdir(lake.gold) if d.startswith("date=")]
+
+
+def test_commit_protocol_is_decided_only_by_the_lake_modules():
+    """Only lake.py and lake_manifest.py construct a ManifestedTable or
+    compare a commit_protocol; every other module opens its zone through
+    lake.open_table."""
+    import re
+
+    import retail_aws_etl_pipeline_spark as pkg
+
+    decides = re.compile(
+        r"ManifestedTable\(|commit_protocol\s*(?:[=!]=|(?:not\s+)?in\b)|[=!]=\s*commit_protocol"
+    )
+    root = os.path.dirname(pkg.__file__)
+    offenders = []
+    for dirpath, _dirs, files in os.walk(root):
+        for name in files:
+            path = os.path.join(dirpath, name)
+            if not name.endswith(".py") or os.path.relpath(path, root) in (
+                "lake.py", "lake_manifest.py",
+            ):
+                continue
+            with open(path) as f:
+                for n, line in enumerate(f, 1):
+                    if decides.search(line):
+                        offenders.append(f"{os.path.relpath(path, root)}:{n}: {line.strip()}")
+    assert offenders == []
 
 
 def test_manifest_gc_retention_and_debris(spark, tmp_path):
@@ -888,8 +1035,6 @@ def test_gold_upsert_stream_killed_midbatch_recovers(spark, tmp_path):
     gold merge commits but the checkpoint never records it; restart must
     replay it through the keep-latest merge with no duplicate keys and
     the same final gold as an uninterrupted run."""
-    import shutil as sh
-
     import pytest
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
@@ -901,10 +1046,9 @@ def test_gold_upsert_stream_killed_midbatch_recovers(spark, tmp_path):
 
     lake = LakeLayout(str(tmp_path / "lake"))
     ck = str(tmp_path / "ck")
-    src = "/root/reference/sample_csv_files/sales_2024-10-16.csv"
     for name in ("w1.csv", "w2.csv"):
         f = tmp_path / name
-        sh.copy(src, f)
+        _write_csv(f, range(30), n_bad=2)
         ingest_file(spark, str(f), lake, archive=False, write_reject_csv=False)
 
     # faulty drain: merge the first batch fully, then die before the
@@ -937,7 +1081,7 @@ def test_gold_upsert_stream_killed_midbatch_recovers(spark, tmp_path):
     clean = LakeLayout(str(tmp_path / "clean"))
     for name in ("c1.csv", "c2.csv"):
         f = tmp_path / name
-        sh.copy(src, f)
+        _write_csv(f, range(30), n_bad=2)
         ingest_file(spark, str(f), clean, archive=False, write_reject_csv=False)
     q = gold_upsert_stream(spark, clean, str(tmp_path / "ck_clean"))
     q.awaitTermination()

@@ -16,12 +16,8 @@ import shutil
 import pytest
 
 from retail_aws_etl_pipeline_spark.ingest import ingest_file
-from retail_aws_etl_pipeline_spark.lake import LakeLayout
-from retail_aws_etl_pipeline_spark.operators.compact import (
-    compact_pending,
-    list_date_partitions,
-    register_gold_view,
-)
+from retail_aws_etl_pipeline_spark.lake import LakeLayout, list_date_partitions
+from retail_aws_etl_pipeline_spark.operators.compact import compact_pending, register_gold_view
 from retail_aws_etl_pipeline_spark.schema import SILVER_SCHEMA
 
 SAMPLES = "/root/reference/sample_csv_files"

@@ -278,19 +278,16 @@ def test_gold_upsert_stream(spark, tmp_path):
     """Two silver waves with overlapping transaction_ids: the streamed gold
     keeps exactly one (latest) row per key, and re-running the stream with
     the same checkpoint is a no-op."""
-    import glob as g
-    import shutil as sh
-
     from retail_aws_etl_pipeline_spark.ingest import ingest_file
     from retail_aws_etl_pipeline_spark.lake import LakeLayout
     from retail_aws_etl_pipeline_spark.streaming.streams import gold_upsert_stream
+    from tests.conftest import write_sales_csv
 
     lake = LakeLayout(str(tmp_path / "lake"))
     ck = str(tmp_path / "ck")
-    src = "/root/reference/sample_csv_files/sales_2024-10-16.csv"
 
     # wave 1
-    f1 = tmp_path / "w1.csv"; sh.copy(src, f1)
+    f1 = tmp_path / "w1.csv"; write_sales_csv(f1, range(30), n_bad=2)
     ingest_file(spark, str(f1), lake, archive=False, write_reject_csv=False)
     q = gold_upsert_stream(spark, lake, ck); q.awaitTermination()
     gold1 = spark.read.parquet(lake.gold)
@@ -299,7 +296,7 @@ def test_gold_upsert_stream(spark, tmp_path):
     assert gold1.groupBy("date", "transaction_id").count().filter("count>1").count() == 0
 
     # wave 2: same file again (same transaction_ids, later ingest_ts)
-    f2 = tmp_path / "w2.csv"; sh.copy(src, f2)
+    f2 = tmp_path / "w2.csv"; write_sales_csv(f2, range(30), n_bad=2)
     r2 = ingest_file(spark, str(f2), lake, archive=False, write_reject_csv=False)
     q = gold_upsert_stream(spark, lake, ck); q.awaitTermination()
     gold2 = spark.read.parquet(lake.gold)
@@ -316,10 +313,9 @@ def test_gold_upsert_stream(spark, tmp_path):
 def test_continuous_pipeline_available_now(spark, tmp_path):
     """Three drains of the end-to-end pipeline: new file per wave lands in
     gold, dedup invariant holds, and an empty wave is a complete no-op."""
-    import shutil as sh
-
     from retail_aws_etl_pipeline_spark.lake import LakeLayout
     from retail_aws_etl_pipeline_spark.streaming import run_pipeline_available_now
+    from tests.conftest import write_sales_csv
 
     incoming = tmp_path / "incoming"
     incoming.mkdir()
@@ -327,7 +323,7 @@ def test_continuous_pipeline_available_now(spark, tmp_path):
     ck = str(tmp_path / "ck")
     kw = dict(archive=False, write_reject_csv=False)
 
-    sh.copy("/root/reference/sample_csv_files/sales_2024-10-16.csv", incoming / "a.csv")
+    write_sales_csv(incoming / "a.csv", range(30), n_bad=2)
     res1 = run_pipeline_available_now(spark, str(incoming), lake, ck, **kw)
     assert [r.status for r in res1] == ["ok"]
     gold1 = spark.read.parquet(lake.gold)
@@ -335,7 +331,7 @@ def test_continuous_pipeline_available_now(spark, tmp_path):
     assert n1 > 0
     assert gold1.groupBy("date", "transaction_id").count().filter("count>1").count() == 0
 
-    sh.copy("/root/reference/sample_csv_files/sales_2024-12-07.csv", incoming / "b.csv")
+    write_sales_csv(incoming / "b.csv", range(100, 130), n_bad=2)
     res2 = run_pipeline_available_now(spark, str(incoming), lake, ck, **kw)
     assert [r.status for r in res2] == ["ok"]  # only the new file ran
     gold2 = spark.read.parquet(lake.gold)
@@ -545,21 +541,16 @@ def test_gold_upsert_stream_soak(spark, tmp_path):
     gold through several small micro-batches (rate limit honored), the
     keyed keep-latest merge must converge to exactly the batch answer,
     and a final availableNow drain on the same checkpoint is a no-op."""
-    import shutil as sh
-
     from retail_aws_etl_pipeline_spark.ingest import ingest_file
     from retail_aws_etl_pipeline_spark.lake import LakeLayout
     from retail_aws_etl_pipeline_spark.streaming.streams import gold_upsert_stream
+    from tests.conftest import write_sales_csv
 
     lake = LakeLayout(str(tmp_path / "lake"))
     ck = str(tmp_path / "ck")
-    srcs = [
-        "/root/reference/sample_csv_files/sales_2024-10-16.csv",
-        "/root/reference/sample_csv_files/sales_2024-12-07.csv",
-        "/root/reference/sample_csv_files/sales_2024-10-16.csv",  # redelivery
-    ]
+    waves = [range(30), range(100, 130), range(30)]  # wave 2 redelivers wave 0
     # wave 0 exists before start; waves 1-2 land while the query runs
-    f0 = tmp_path / "w0.csv"; sh.copy(srcs[0], f0)
+    f0 = tmp_path / "w0.csv"; write_sales_csv(f0, waves[0], n_bad=2)
     r0 = ingest_file(spark, str(f0), lake, archive=False, write_reject_csv=False)
 
     q = gold_upsert_stream(
@@ -573,8 +564,8 @@ def test_gold_upsert_stream_soak(spark, tmp_path):
         # maxFilesPerTrigger=1 the source must take one silver file per
         # batch, so data-carrying batches == silver files.
         run_ids = []
-        for i, src in enumerate(srcs[1:], start=1):
-            f = tmp_path / f"w{i}.csv"; sh.copy(src, f)
+        for i, ids in enumerate(waves[1:], start=1):
+            f = tmp_path / f"w{i}.csv"; write_sales_csv(f, ids, n_bad=2)
             r = ingest_file(spark, str(f), lake, archive=False, write_reject_csv=False)
             run_ids.append(r.ingest_run_id)
         q.processAllAvailable()
